@@ -5,6 +5,6 @@ from inside Arrow-batched pandas UDFs; nothing here imports pyspark.
 """
 
 from ocr_machine_spark.core.extract import ExtractResult, extract_one
-from ocr_machine_spark.core.htmlparse import parse_html, render
+from ocr_machine_spark.core.htmlparse import render_page
 
-__all__ = ["ExtractResult", "extract_one", "parse_html", "render"]
+__all__ = ["ExtractResult", "extract_one", "render_page"]

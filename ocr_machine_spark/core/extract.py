@@ -32,7 +32,7 @@ import codecs
 import re
 from dataclasses import dataclass, field
 
-from ocr_machine_spark.core.htmlparse import block_type_of, render_page
+from ocr_machine_spark.core.htmlparse import block_type_of, parse_attrs, render_page, scan
 
 # ---------------------------------------------------------------------------
 # Charset sniffing (WHATWG-style, simplified). A real Common-Crawl corpus is a
@@ -385,29 +385,47 @@ def resolve_href(base_url: str, href: str) -> str | None:
     return f"{scheme}//{auth}{base_dir}{href}"
 
 
-def _anchor_text(el) -> str:
-    """Whitespace-normalized rendered text of an element's subtree (text
-    runs joined with a space, then collapsed)."""
-    parts: list[str] = []
-    stack = [el]
-    while stack:
-        node = stack.pop()
-        if isinstance(node, str):
-            parts.append(node)
-        else:
-            stack.extend(reversed(node.children))
-    return " ".join(" ".join(parts).split())
-
-
 def outlinks_one(html: bytes | str | None, base_url: str) -> list[tuple[str, str]]:
     """One page's HTML → [(resolved_href, anchor_text)] in document order.
+
+    Every ``<a>`` with a resolvable href counts, nested ones included. Its
+    anchor text is the text inside it with one space at each element
+    boundary, whitespace-collapsed — so ``<a>p<script>q</script>r</a>`` gives
+    "p q r", however the tokenizer happens to chunk a text run.
 
     Same decode path as extract_one (charset sniff, errors="replace");
     malformed pages yield [] rather than raising — a page with no parseable
     links simply contributes nothing to the link graph (the extraction gate
     accounts for the failure itself).
     """
-    from ocr_machine_spark.core.htmlparse import parse_html
+    out: list[tuple[str, str]] = []
+    anchors: list[tuple[int, int]] = []  # per open <a>: (slot in out or -1, start in runs)
+    runs: list[str] = []  # text inside open anchors; " " marks an element boundary
+
+    def enter(tag: str, depth: int, raw_attrs: str) -> None:
+        if anchors:
+            runs.append(" ")
+        if tag == "a":
+            href = resolve_href(base_url, parse_attrs(raw_attrs).get("href", ""))
+            slot = -1
+            if href is not None:
+                slot = len(out)  # reserved now, so links stay in document order
+                out.append((href, ""))
+            anchors.append((slot, len(runs)))
+
+    def leave(tag: str) -> None:
+        if tag == "a":
+            slot, start = anchors.pop()
+            if slot >= 0:
+                out[slot] = (out[slot][0], " ".join("".join(runs[start:]).split()))
+            if not anchors:
+                runs.clear()
+        if anchors:
+            runs.append(" ")
+
+    def text(s: str) -> None:
+        if anchors:
+            runs.append(s)
 
     try:
         if html is None:
@@ -419,20 +437,7 @@ def outlinks_one(html: bytes | str | None, base_url: str) -> list[tuple[str, str
             text_html = b.decode(sniff_charset(b), errors="replace")
         else:
             text_html = html
-        root = parse_html(text_html)
+        scan(text_html, enter, leave, text)
     except Exception:  # noqa: BLE001 — survive any malformed page
         return []
-    out: list[tuple[str, str]] = []
-    stack = [root]
-    # explicit stack, children pushed reversed → document order; nested <a>
-    # cannot occur (the tree builder's implied-close pops an open <a>)
-    while stack:
-        node = stack.pop()
-        if isinstance(node, str):
-            continue
-        if node.tag == "a":
-            href = resolve_href(base_url, node.attrs.get("href", ""))
-            if href is not None:
-                out.append((href, _anchor_text(node)))
-        stack.extend(reversed(node.children))
     return out

@@ -1,9 +1,19 @@
-"""Deterministic HTML → DOM → (visible text, typed blocks) for the extraction core.
+"""Deterministic HTML → (visible text, typed blocks) for the extraction core.
 
-Pure stdlib (``html.parser``) — this container ships no lxml/bs4. The tree
-builder is tolerant of malformed markup (unclosed tags, stray end tags),
-mirroring how the reference tolerates imperfect OCR input (its per-page
-try/except at ``python_files/table_detector_agent.py:193-206``).
+Pure stdlib (no lxml/bs4). One tokenizer, ``scan``, turns a page into
+``enter``/``leave``/``text`` events. It tolerates malformed markup exactly as
+``html.parser`` does (unclosed tags, stray end tags, failed start tags
+recovered as data), keeps the open-element stack with HTML5 implied ends, and
+knows nothing about rendering — mirroring how the reference tolerates
+imperfect OCR input (its per-page try/except at
+``python_files/table_detector_agent.py:193-206``). Two sinks consume the
+events: ``render_page`` below and ``core.extract.outlinks_one``. There is no
+fallback parser: a tokenizer error propagates, and ``extract_one`` records it
+as a failed row.
+
+``parse_html_stdlib`` (an ``html.parser`` tree) and ``render`` (a walk over
+it) are the tests' independent oracle for ``scan`` + ``render_page``; no
+production path calls them.
 
 The renderer is the analogue of the reference's OCR block extraction
 (``python_files/textract_agent.py:43-98``): it linearises the document into a
@@ -17,9 +27,9 @@ Determinism contract (SURVEY.md §7 "hard parts"): no wall-clock, no
 dict-iteration-order leaks, one fixed whitespace policy —
 * whitespace runs inside a text node collapse to a single space;
 * block-element boundaries emit exactly one ``\\n`` (never two in a row);
-* entities are decoded (``convert_charrefs=True``).
-Given the same bytes, ``render`` returns byte-identical output on every run
-and under every partitioning.
+* entities are decoded (as ``html.parser`` with ``convert_charrefs=True``).
+Given the same bytes, ``render_page`` returns byte-identical output on every
+run and under every partitioning.
 """
 
 from __future__ import annotations
@@ -135,47 +145,19 @@ TABLE_TAGS = frozenset({"table", "thead", "tbody", "tfoot", "tr", "td", "th", "c
 _P_CLOSERS = BLOCK_TAGS - {"html", "body"}
 
 
-def _implied_close_stack(stack: list, tag: str) -> None:
-    if tag == "body":
-        # <body> implies the head is over, even without </head>
-        for i in range(len(stack) - 1, 0, -1):
-            if stack[i].tag == "head":
-                del stack[i:]
-                break
-    top = stack[-1].tag
-    if top == "p" and tag in _P_CLOSERS:
-        stack.pop()
-    elif top == "li" and tag == "li":
-        stack.pop()
-    elif top in ("dd", "dt") and tag in ("dd", "dt"):
-        stack.pop()
-    elif top in ("td", "th") and tag in ("td", "th", "tr"):
-        stack.pop()
-        if stack[-1].tag == "tr" and tag == "tr":
-            stack.pop()
-    elif top == "tr" and tag == "tr":
-        stack.pop()
-
-
 class Element:
-    __slots__ = ("tag", "children", "_attrs", "_attrs_raw")
+    __slots__ = ("tag", "attrs", "children")
 
-    def __init__(self, tag: str, attrs: dict[str, str] | None = None, attrs_raw: str = ""):
+    def __init__(self, tag: str, attrs: dict[str, str | None]):
         self.tag = tag
-        self._attrs = attrs
-        self._attrs_raw = attrs_raw
+        self.attrs = attrs
         self.children: list[Element | str] = []
-
-    @property
-    def attrs(self) -> dict[str, str]:
-        # parsed lazily: the hot path never reads attributes
-        if self._attrs is None:
-            self._attrs = _parse_attrs(self._attrs_raw) if self._attrs_raw.strip() else {}
-        return self._attrs
 
 
 class _TreeBuilder(HTMLParser):
-    """Tolerant stack-based tree builder (text children are plain ``str``)."""
+    """Tolerant stack-based tree builder (text children are plain ``str``).
+    Its implied ends are written out here, apart from ``scan``'s table, so
+    the oracle shares no tokenizer code with what it checks."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
@@ -184,7 +166,26 @@ class _TreeBuilder(HTMLParser):
 
     # -- implied-end handling ------------------------------------------------
     def _implied_close(self, tag: str) -> None:
-        _implied_close_stack(self.stack, tag)
+        stack = self.stack
+        if tag == "body":
+            # <body> implies the head is over, even without </head>
+            for i in range(len(stack) - 1, 0, -1):
+                if stack[i].tag == "head":
+                    del stack[i:]
+                    break
+        top = stack[-1].tag
+        if top == "p" and tag in _P_CLOSERS:
+            stack.pop()
+        elif top == "li" and tag == "li":
+            stack.pop()
+        elif top in ("dd", "dt") and tag in ("dd", "dt"):
+            stack.pop()
+        elif top in ("td", "th") and tag in ("td", "th", "tr"):
+            stack.pop()
+            if stack[-1].tag == "tr" and tag == "tr":
+                stack.pop()
+        elif top == "tr" and tag == "tr":
+            stack.pop()
 
     # -- parser callbacks ----------------------------------------------------
     def handle_starttag(self, tag: str, attrs) -> None:
@@ -211,8 +212,8 @@ class _TreeBuilder(HTMLParser):
 
 
 def parse_html_stdlib(html: str) -> Element:
-    """Reference tree builder on stdlib html.parser (slow path; kept as the
-    differential oracle for the fast tokenizer and as its fallback)."""
+    """Reference tree on stdlib html.parser — the tests' differential oracle
+    for ``scan``; no production path calls it."""
     tb = _TreeBuilder()
     tb.feed(html)
     tb.close()
@@ -220,18 +221,17 @@ def parse_html_stdlib(html: str) -> Element:
 
 
 # ---------------------------------------------------------------------------
-# Fast tokenizer — same tree, ~4x less tokenization overhead
+# The tokenizer — html.parser's tree semantics, ~4x less overhead
 # ---------------------------------------------------------------------------
 #
 # Profiling showed 72% of extract_one inside html.parser's regex machinery
-# (goahead/parse_starttag/updatepos). This scanner emits the exact same tree
-# for well-formed-ish pages; any exception falls back to the stdlib builder.
+# (goahead/parse_starttag/updatepos); one regex search per token replaces it.
 
 import re  # noqa: E402  (module-local import keeps the top clean)
 from html import unescape  # noqa: E402
 
 # tag-name and attribute sub-patterns lifted from CPython's html.parser
-# (tagfind_tolerant / locatestarttagend_tolerant) so the fast scanner accepts
+# (tagfind_tolerant / locatestarttagend_tolerant) so the scanner accepts
 # exactly what the stdlib reference parser accepts
 # possessive name: stdlib parses the name as a committed step (tagfind), so
 # a failing attrs/'>' suffix must NOT backtrack into the name — otherwise
@@ -243,17 +243,24 @@ _ATTRS_TOLERANT = (
     # before '>': that slash is the self-close marker (stdlib's parse loop
     # decides via `end == '/>'`; regression: '<figcaption/>' + trailing text
     # attributed to a phantom open block)
-    r"(?:(?:\s|/(?!>))*(?:(?<=['\"\s/])[^\s/>][^\s/=>]*"
+    # The outer repeats are possessive: everything after each can match
+    # empty, so the first match is the greedy one either way, but sre then
+    # frees each attribute's backtrack state — a 30k-attribute tag costs the
+    # same per char as a short one instead of ~3x more.
+    r"(?:(?:\s|/(?!>))*+(?:(?<=['\"\s/])[^\s/>][^\s/=>]*"
     r"(?:\s*=+\s*(?:'[^']*'|\"[^\"]*\"|(?!['\"])[^>\s]*)(?:\s*,)*)?"
-    r"(?:\s|/(?!>))*)*)?(?:\s|/(?!>))*"
+    r"(?:\s|/(?!>))*+)*+)?(?:\s|/(?!>))*+"
 )
 _TOKEN_RE = re.compile(
     # start tag: attrs are atomic for the same reason the name is possessive
     # — stdlib commits each parse stage before checking for '>'
     r"<(?P<name>" + _TAGNAME + r")(?P<attrs>(?>" + _ATTRS_TOLERANT + r"))(?P<selfclose>/?)>"
-    # end tag, tolerant: html.parser's parse_endtag takes the NAME only and
-    # scans straight to the next '>' — junk between them is discarded, never
-    # parsed as attrs ('</v -='>' is handle_endtag("v"))
+    # end tag, strict first: html.parser's endtagfind allows whitespace
+    # around the name ('</ div >' is handle_endtag("div"))
+    r"|</\s*(?P<end>[a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
+    # then tolerant: parse_endtag takes the NAME only and scans straight to
+    # the next '>' — junk between them is discarded, never parsed as attrs
+    # ('</v -='>' is handle_endtag("v"))
     r"|</(?P<endname>" + _TAGNAME + r")[^>]*+>"
     # '<!' must not swallow a '<!--' whose comment never closes — that is an
     # UNTERMINATED COMMENT and html.parser recovers it as data (see
@@ -263,15 +270,11 @@ _TOKEN_RE = re.compile(
     r"|<!--.*?--\s*>|<!(?!--)[^>]*>|<\?[^>]*>|</[^a-zA-Z>][^>]*>|</>",
     re.DOTALL,
 )
-_ATTR_RE = re.compile(
-    r"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)(?:\s*=\s*("[^"]*"|'[^']*'|[^\s>]*))?"""
-)
 # html.parser's CDATA_CONTENT_ELEMENTS: raw-text scan, no nested parsing.
-# The close pattern mirrors stdlib: '</script' not followed by a name char
-# (so '</scriptx>' stays content), case-insensitive, '</ script >' allowed.
-_RAWTEXT_CLOSE = {
-    t: re.compile(rf"</\s*{t}(?![a-zA-Z0-9:._-])", re.IGNORECASE) for t in ("script", "style")
-}
+# The close pattern is stdlib's set_cdata_mode one: case-insensitive,
+# whitespace allowed around the name, nothing else ('</script x>' and
+# '</scriptx>' stay content).
+_RAWTEXT_CLOSE = {t: re.compile(rf"</\s*{t}\s*>", re.IGNORECASE) for t in ("script", "style")}
 
 
 # --- failed-start-tag recovery (html.parser semantics) ----------------------
@@ -328,86 +331,132 @@ def _gap_chunks(html: str, a: int, b: int) -> tuple[list[str], int]:
     return chunks, i
 
 
-def _parse_attrs(raw: str) -> dict[str, str]:
-    attrs: dict[str, str] = {}
-    for m in _ATTR_RE.finditer(raw):
-        v = m.group(2)
-        if v and v[0] in "\"'":
-            v = v[1:-1]
-        attrs[m.group(1).lower()] = unescape(v) if v and "&" in v else (v or "")
+# html.parser's attrfind_tolerant, frozen like _TOKEN_RE
+_ATTR_RE = re.compile(
+    r"((?<=['\"\s/])[^\s/>][^\s/=>]*)"
+    r"(\s*=+\s*('[^']*'|\"[^\"]*\"|(?!['\"])[^>\s]*))?(?:\s|/(?!>))*"
+)
+_ATTR_LEAD = re.compile(r"(?:\s|/(?!>))*")
+
+
+def parse_attrs(raw: str) -> dict[str, str | None]:
+    """A start tag's attributes, parsed as html.parser does. ``raw`` is the
+    source between the tag name and ``>``; a valueless attribute maps to
+    None and the last duplicate wins."""
+    attrs: dict[str, str | None] = {}
+    raw = " " + raw  # stands in for the name's last char, which the lookbehind reads
+    k = _ATTR_LEAD.match(raw).end()
+    while k < len(raw):
+        m = _ATTR_RE.match(raw, k)
+        if m is None:
+            break
+        name, rest, value = m.group(1, 2, 3)
+        if not rest:
+            value = None
+        elif value[:1] in ("'", '"') and value[:1] == value[-1:]:
+            value = value[1:-1]
+        attrs[name.lower()] = unescape(value) if value else value
+        k = m.end()
     return attrs
 
 
-def parse_html_fast(html: str) -> Element:
-    root = Element("#root")
-    stack = [root]
+# open element → the start tags that imply its end (HTML5 implied ends)
+_IMPLIED_END = {
+    "p": _P_CLOSERS,
+    "li": {"li"},
+    "dd": {"dd", "dt"},
+    "dt": {"dd", "dt"},
+    "td": {"td", "th", "tr"},
+    "th": {"td", "th", "tr"},
+    "tr": {"tr"},
+}
+
+
+def scan(html: str, enter, leave, text) -> None:
+    """Tokenize ``html`` into events, in document order:
+
+    * ``enter(tag, depth, raw_attrs)``: an element opens; ``depth`` counts its
+      open ancestors and ``raw_attrs`` is the unparsed attribute source;
+    * ``leave(tag)``: it closes. Every enter gets exactly one leave — void and
+      self-closed elements leave at once, open ones by end tag, implied end or
+      end of input;
+    * ``text(s)``: a data run, entities decoded. A closed raw-text element
+      (script/style) yields its content as one undecoded event.
+
+    The element nesting is that of ``parse_html_stdlib`` (differential-fuzzed).
+    Time is linear in the page, except that each unclosed start tag at end of
+    input rescans to the end (``html.parser`` does the same)."""
+    stack: list[str] = []  # open non-void elements, outermost first
+    n_open: dict[str, int] = {}  # per tag name: a stray end tag costs O(1)
+    n = len(html)
     pos = 0
-    while True:
+    while pos < n:
         # search from pos (not finditer): a raw-text consume can land pos
         # INSIDE a pre-found token, whose tail must then be re-tokenized
         m = _TOKEN_RE.search(html, pos)
+        start = m.start() if m is not None else n
+        if start > pos:
+            chunks, resume = _gap_chunks(html, pos, start)
+            for t in chunks:
+                text(unescape(t) if "&" in t else t)
+            if resume > start:
+                pos = resume  # failed-tag swallow consumed this token too
+                continue
         if m is None:
             break
-        start = m.start()
-        if start > pos:
-            chunks, npos = _gap_chunks(html, pos, start)
-            for text in chunks:
-                if "&" in text:
-                    text = unescape(text)
-                stack[-1].children.append(text)
-            if npos > start:
-                pos = npos  # failed-tag swallow consumed this token too
-                continue
         pos = m.end()
-        tag, raw_attrs, selfclose, endname = m.group("name", "attrs", "selfclose", "endname")
-        if endname is not None:
-            endname = endname.lower()
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i].tag == endname:
-                    del stack[i:]
-                    break
-            continue
-        if tag is None:
-            continue  # comment / doctype / processing instruction
+        kind = m.lastgroup  # which alternative matched: the group it ends with
+        if kind != "selfclose":
+            if kind is not None:  # an end tag, "end" or "endname"
+                endname = m.group(kind).lower()
+                if n_open.get(endname):  # else stray: html.parser ignores it
+                    while True:  # close up to the innermost open one
+                        t = stack.pop()
+                        n_open[t] -= 1
+                        leave(t)
+                        if t == endname:
+                            break
+            continue  # else comment / doctype / PI / bogus end tag
+        tag, raw_attrs, selfclose = m.group("name", "attrs", "selfclose")
         tag = tag.lower()
-        if len(stack) > 1 and not selfclose:
-            # stdlib runs implied ends in handle_starttag only — an explicit
-            # self-closing tag (handle_startendtag) never closes an open <p>
-            _implied_close_stack(stack, tag)
-        el = Element(tag, None, raw_attrs)
-        stack[-1].children.append(el)
+        if stack and not selfclose:
+            # html.parser runs implied ends in handle_starttag only — an
+            # explicit self-closing tag (handle_startendtag) closes nothing
+            if tag == "body" and n_open.get("head"):
+                while True:
+                    t = stack.pop()
+                    n_open[t] -= 1
+                    leave(t)
+                    if t == "head":
+                        break
+            closers = _IMPLIED_END.get(stack[-1]) if stack else None
+            if closers is not None and tag in closers:
+                top = stack.pop()
+                n_open[top] -= 1
+                leave(top)
+                if tag == "tr" and top in ("td", "th") and stack and stack[-1] == "tr":
+                    stack.pop()
+                    n_open["tr"] -= 1
+                    leave("tr")
+        enter(tag, len(stack), raw_attrs)
         if selfclose or tag in VOID_TAGS:
+            # '<style/>' does NOT enter raw-text mode in html.parser
+            leave(tag)
             continue
         close = _RAWTEXT_CLOSE.get(tag)
         if close is not None:
             cm = close.search(html, pos)
             if cm is None:
-                el.children.append(html[pos:])
-                pos = len(html)
+                pos = n  # html.parser drops an unclosed raw-text element's content
             else:
-                el.children.append(html[pos : cm.start()])
-                gt = html.find(">", cm.end())
-                pos = gt + 1 if gt != -1 else len(html)
+                text(html[pos : cm.start()])
+                pos = cm.end()
+            leave(tag)
             continue
-        stack.append(el)
-    if pos < len(html):
-        chunks, _ = _gap_chunks(html, pos, len(html))
-        for text in chunks:
-            if "&" in text:
-                text = unescape(text)
-            stack[-1].children.append(text)
-    return root
-
-
-def parse_html(html: str) -> Element:
-    """Parse HTML into a tolerant DOM tree rooted at a ``#root`` element.
-
-    Fast regex scanner with stdlib-parser fallback; both produce the same
-    tree (differential-tested in tests/test_core_extract.py)."""
-    try:
-        return parse_html_fast(html)
-    except Exception:  # pragma: no cover — safety net for pathological markup
-        return parse_html_stdlib(html)
+        stack.append(tag)
+        n_open[tag] = n_open.get(tag, 0) + 1
+    for t in reversed(stack):
+        leave(t)
 
 
 # ---------------------------------------------------------------------------
@@ -498,6 +547,7 @@ class _Renderer:
         self._caption_depth = 0
         # per-table (row, col) counters; stack supports nested tables
         self._table_rc: list[list[int]] = []
+        self._skip_depth = 0  # open SKIP_TAGS elements (scan events only)
 
     # -- emit helpers --------------------------------------------------------
     def _append(self, s: str) -> None:
@@ -571,9 +621,8 @@ class _Renderer:
             else:
                 self._nonstruck_between = True
 
-    # -- element enter/leave events (shared by the tree walk and the
-    #    single-pass tokenizer driver) ---------------------------------------
-    def enter(self, tag: str, depth: int, attrs_src) -> None:
+    # -- element enter/leave (shared by the tree walk and the scan sink) -----
+    def enter(self, tag: str, depth: int, attrs: str | dict) -> None:
         if tag in BLOCK_TAGS:
             self._pending_newline = True
             blk = Block(
@@ -599,16 +648,13 @@ class _Renderer:
                 rc[1] += 1
                 blk.row_idx, blk.col_idx = rc[0], rc[1]
                 blk.is_header_cell = tag == "th"
-                attrs = (
-                    _parse_attrs(attrs_src)
-                    if isinstance(attrs_src, str)
-                    else (attrs_src.attrs if isinstance(attrs_src, Element) else attrs_src)
-                ) if attrs_src else None
+                if isinstance(attrs, str):
+                    attrs = parse_attrs(attrs)
                 if attrs:
                     try:
                         blk.row_span = max(int(attrs.get("rowspan", 1)), 1)
                         blk.col_span = max(int(attrs.get("colspan", 1)), 1)
-                    except ValueError:
+                    except (TypeError, ValueError):  # valueless, or not a number
                         pass
             self.blocks.append(blk)
             self._open.append(blk)
@@ -652,18 +698,48 @@ class _Renderer:
             if tag == "br":
                 self._pending_newline = True
                 continue
-            self.enter(tag, depth, child)
+            self.enter(tag, depth, child.attrs)
             self.walk(child, depth + 1)
             self.leave(tag)
 
+    # -- scan sink: invisible subtrees and <br> are handled here, so the
+    #    tokenizer knows nothing about rendering ------------------------------
+    def on_enter(self, tag: str, depth: int, raw_attrs: str) -> None:
+        if tag in SKIP_TAGS:
+            self._skip_depth += 1
+        elif self._skip_depth == 0:
+            if tag == "br":
+                self._pending_newline = True
+            else:
+                self.enter(tag, depth, raw_attrs)
 
-def render(root: Element) -> tuple[str, list[Block]]:
-    """Linearise a DOM tree into (raw visible text, blocks-with-text).
+    def on_leave(self, tag: str) -> None:
+        if tag in SKIP_TAGS:
+            self._skip_depth -= 1
+        elif self._skip_depth == 0:
+            self.leave(tag)
+
+    def on_text(self, s: str) -> None:
+        if self._skip_depth == 0:
+            self._text(s)
+
+
+def render_page(html: str) -> tuple[str, list[Block]]:
+    """Tokenize and render in one pass: (raw visible text, blocks-with-text).
 
     Blocks that collected no text are dropped (the reference likewise keeps
     only blocks that carry Text — WORD/LINE filtering at
     ``training_strikethrough/processing_scripts/training_textract.py:72-78``).
     """
+    r = _Renderer()
+    scan(html, r.on_enter, r.on_leave, r.on_text)
+    raw = "".join(r.parts)
+    blocks = [b for b in r.blocks if b.start >= 0 and b.n_chars > 0]
+    return raw, blocks
+
+
+def render(root: Element) -> tuple[str, list[Block]]:
+    """``render_page`` over a ``parse_html_stdlib`` tree — the tests' oracle."""
     r = _Renderer()
     r.walk(root)
     raw = "".join(r.parts)
@@ -671,134 +747,3 @@ def render(root: Element) -> tuple[str, list[Block]]:
     return raw, blocks
 
 
-# ---------------------------------------------------------------------------
-# Single-pass fast path: tokenizer → renderer events, no tree allocation
-# ---------------------------------------------------------------------------
-
-
-def render_html(html: str) -> tuple[str, list[Block]]:
-    """Tokenize and render in one pass (no Element tree) — the hot path used
-    by ``extract_one``. Event-for-event equivalent to
-    ``render(parse_html_stdlib(html))`` (differential-fuzzed); falls back to
-    the tree path on any internal error."""
-    r = _Renderer()
-    frames: list[str] = []  # open non-void elements (inline included)
-    skip_depth = 0
-    enter, leave, text = r.enter, r.leave, r._text
-
-    def close_to(i: int) -> None:
-        nonlocal skip_depth
-        for j in range(len(frames) - 1, i - 1, -1):
-            t = frames[j]
-            if t in SKIP_TAGS:
-                skip_depth -= 1
-            elif skip_depth == 0:
-                leave(t)
-        del frames[i:]
-
-    def implied(tag: str) -> None:
-        if tag == "body":
-            for i in range(len(frames) - 1, -1, -1):
-                if frames[i] == "head":
-                    close_to(i)
-                    break
-        if not frames:
-            return
-        top = frames[-1]
-        n = len(frames)
-        if top == "p" and tag in _P_CLOSERS:
-            close_to(n - 1)
-        elif top == "li" and tag == "li":
-            close_to(n - 1)
-        elif top in ("dd", "dt") and tag in ("dd", "dt"):
-            close_to(n - 1)
-        elif top in ("td", "th") and tag in ("td", "th", "tr"):
-            close_to(n - 1)
-            if frames and frames[-1] == "tr" and tag == "tr":
-                close_to(len(frames) - 1)
-        elif top == "tr" and tag == "tr":
-            close_to(n - 1)
-
-    pos = 0
-    while True:
-        # search from pos (not finditer): a raw-text consume can land pos
-        # INSIDE a pre-found token, whose tail must then be re-tokenized
-        m = _TOKEN_RE.search(html, pos)
-        if m is None:
-            break
-        start = m.start()
-        if start > pos:
-            if skip_depth == 0:
-                chunks, npos = _gap_chunks(html, pos, start)
-                for t in chunks:
-                    if "&" in t:
-                        t = unescape(t)
-                    text(t)
-                if npos > start:
-                    pos = npos  # failed-tag swallow consumed this token too
-                    continue
-        pos = m.end()
-        tag, raw_attrs, selfclose, endname = m.group("name", "attrs", "selfclose", "endname")
-        if endname is not None:
-            endname = endname.lower()
-            for i in range(len(frames) - 1, -1, -1):
-                if frames[i] == endname:
-                    close_to(i)
-                    break
-            continue
-        if tag is None:
-            continue  # comment / doctype / PI / bogus end tag
-        tag = tag.lower()
-        if frames and not selfclose:
-            # stdlib runs implied ends in handle_starttag only (explicit
-            # self-closing tags go through handle_startendtag without them)
-            implied(tag)
-        if tag in SKIP_TAGS:
-            if selfclose or tag in VOID_TAGS:
-                # '<style/>' does NOT enter CDATA mode in html.parser —
-                # the element is empty, following text is regular text
-                continue
-            # raw-text elements: consume their content at the tokenizer level
-            close = _RAWTEXT_CLOSE.get(tag)
-            if close is not None:
-                cm = close.search(html, pos)
-                if cm is None:
-                    pos = len(html)
-                    continue
-                gt = html.find(">", cm.end())
-                pos = gt + 1 if gt != -1 else len(html)
-                continue
-            frames.append(tag)
-            skip_depth += 1
-            continue
-        if skip_depth > 0:
-            if not (selfclose or tag in VOID_TAGS):
-                frames.append(tag)
-            continue
-        if tag == "br":
-            r._pending_newline = True
-            continue
-        if selfclose or tag in VOID_TAGS:
-            enter(tag, len(frames), raw_attrs)
-            leave(tag)
-            continue
-        enter(tag, len(frames), raw_attrs)
-        frames.append(tag)
-    if pos < len(html) and skip_depth == 0:
-        chunks, _ = _gap_chunks(html, pos, len(html))
-        for t in chunks:
-            if "&" in t:
-                t = unescape(t)
-            text(t)
-    close_to(0)
-    raw = "".join(r.parts)
-    blocks = [b for b in r.blocks if b.start >= 0 and b.n_chars > 0]
-    return raw, blocks
-
-
-def render_page(html: str) -> tuple[str, list[Block]]:
-    """Fast single-pass render with tree-path fallback."""
-    try:
-        return render_html(html)
-    except Exception:  # pragma: no cover — safety net
-        return render(parse_html_stdlib(html))

@@ -7,30 +7,30 @@ extractor must independently recover byte-identical text from the HTML alone.
 """
 
 from ocr_machine_spark.core.extract import extract_one
-from ocr_machine_spark.core.htmlparse import parse_html, render
+from ocr_machine_spark.core.htmlparse import render_page
 from ocr_machine_spark.fixtures import gen_pages
 
 N = 300
 
 
 def test_render_whitespace_policy():
-    raw, blocks = render(parse_html("<p>  a   b </p><p>c</p>"))
+    raw, blocks = render_page("<p>  a   b </p><p>c</p>")
     assert raw == "a b\nc"
     assert [(b.start, b.end) for b in blocks] == [(0, 3), (4, 5)]
 
 
 def test_render_skips_script_style_head():
-    raw, _ = render(parse_html("<head><title>t</title></head><script>x=1</script><p>hi</p><style>.a{}</style>"))
+    raw, _ = render_page("<head><title>t</title></head><script>x=1</script><p>hi</p><style>.a{}</style>")
     assert raw == "hi"
 
 
 def test_render_entities_and_br():
-    raw, _ = render(parse_html("<p>a &amp; b<br>c</p>"))
+    raw, _ = render_page("<p>a &amp; b<br>c</p>")
     assert raw == "a & b\nc"
 
 
 def test_render_malformed_unclosed():
-    raw, blocks = render(parse_html("<p>one<p>two<li>three"))
+    raw, blocks = render_page("<p>one<p>two<li>three")
     assert raw == "one\ntwo\nthree"
     assert len(blocks) == 3
 
@@ -122,9 +122,10 @@ def test_goldens_match_extractor():
 
 
 def test_fast_parser_matches_stdlib():
-    """Differential: the fast tokenizer and the stdlib builder produce the
-    same rendered text and blocks on the whole fixture corpus + edge cases."""
-    from ocr_machine_spark.core.htmlparse import parse_html_fast, parse_html_stdlib
+    """Differential: the single-pass tokenizer+renderer and the stdlib tree
+    oracle produce the same rendered text and blocks on the whole fixture
+    corpus + edge cases."""
+    from ocr_machine_spark.core.htmlparse import parse_html_stdlib, render
 
     # decode each page with its own charset (fixture case 10 pages are
     # cp1252/shift_jis/BOM'd — the parser operates on already-decoded text)
@@ -142,7 +143,7 @@ def test_fast_parser_matches_stdlib():
         "just text no tags",
     ]
     for html in cases:
-        fa, fb = render(parse_html_fast(html)), render(parse_html_stdlib(html))
+        fa, fb = render_page(html), render(parse_html_stdlib(html))
         assert fa[0] == fb[0], html[:80]
         assert [(b.tag, b.start, b.end, b.link_chars, b.struck_spans) for b in fa[1]] == [
             (b.tag, b.start, b.end, b.link_chars, b.struck_spans) for b in fb[1]
@@ -349,6 +350,21 @@ def test_outlinks_one_document_order_and_nesting():
         ("https://h.example/one", "first bold link"),
         ("https://h.example/dir/two.html", "second"),
         ("https://abs.example/p", "third"),
+    ]
+    base = "https://h.example/"
+    # <a> never implies the end of an open <a>: both are reported, in
+    # pre-order, and the outer anchor's text includes the inner one's
+    assert outlinks_one("<a href=/1>x<a href=/2>y</a>z</a>", base) == [
+        ("https://h.example/1", "x y z"),
+        ("https://h.example/2", "y"),
+    ]
+    # raw-text content is anchor text; element boundaries become spaces
+    assert outlinks_one("<a href=/3>p<script>q</script>r</a>", base) == [
+        ("https://h.example/3", "p q r")
+    ]
+    # an anchor in an invisible subtree is still a link
+    assert outlinks_one("<noscript><a href=/4>in noscript</a></noscript>", base) == [
+        ("https://h.example/4", "in noscript")
     ]
 
 

@@ -1,8 +1,9 @@
 """Property-based tests (hypothesis) for the extraction core.
 
 Invariants that must hold for ARBITRARY input, not just fixtures:
-- the parser never raises (tolerant-input contract);
-- fast and stdlib parsers agree (differential oracle);
+- the tokenizer never raises (tolerant-input contract);
+- render_page and outlinks_one agree with walks over the stdlib
+  html.parser tree (differential oracle);
 - spans index into raw text correctly and never overlap out of order;
 - extraction is a pure function (same bytes → same output).
 """
@@ -10,12 +11,18 @@ Invariants that must hold for ARBITRARY input, not just fixtures:
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from ocr_machine_spark.core.extract import extract_one
-from ocr_machine_spark.core.htmlparse import parse_html_fast, parse_html_stdlib, render
+from ocr_machine_spark.core.extract import extract_one, outlinks_one, resolve_href
+from ocr_machine_spark.core.htmlparse import parse_html_stdlib, render, render_page
 
 TAGS = ["p", "div", "li", "ul", "nav", "table", "td", "tr", "a", "del", "b", "h2",
         "footer", "figure", "figcaption", "script", "style", "br", "img", "span",
-        "P", "DIV", "TABLE", "TR", "DEL", "SPAN", "Script", "StYlE"]  # case-folding
+        # the invisible subtrees the renderer (not the tokenizer) skips
+        "head", "title", "noscript", "svg", "iframe", "object", "template",
+        "canvas", "datalist",
+        "P", "DIV", "TABLE", "TR", "DEL", "SPAN", "Script", "StYlE", "A", "Title"]  # case-folding
+
+HREFS = ["/x", "y.html", "?page=2", "//o.example/q", "https://e.example/p",
+         "#frag", "", "mailto:z@q", "a&amp;b"]
 
 # alphabet includes the failed-start-tag recovery triggers ('=', '/', '!',
 # '?', quotes) — round 2 hardened the tokenizer against this whole class
@@ -25,17 +32,19 @@ words = st.text(alphabet="abcdefg &<>'\"\n\t!-/=?;", min_size=0, max_size=30)
 @st.composite
 def html_soup(draw):
     """Random (often malformed) tag soup — includes self-closing tags,
-    comments, and attribute junk that exercises html.parser's
+    comments, unclosed and nested anchors, end tags with whitespace around
+    the name, and attribute junk that exercises html.parser's
     incomplete-start-tag recovery."""
     n = draw(st.integers(1, 25))
     parts = []
     for _ in range(n):
-        kind = draw(st.integers(0, 5))
+        kind = draw(st.integers(0, 6))
         tag = draw(st.sampled_from(TAGS))
         if kind == 0:
             parts.append(f"<{tag}>")
         elif kind == 1:
-            parts.append(f"</{tag}>")
+            pad = st.sampled_from(["", "", " ", "\t", "\x0b", " x"])
+            parts.append(f"</{draw(pad).rstrip('x')}{tag}{draw(pad)}>")
         elif kind == 2:
             parts.append(draw(words))
         elif kind == 3:
@@ -43,25 +52,19 @@ def html_soup(draw):
             parts.append(f"<{tag}{attr}>{draw(words)}</{tag}>")
         elif kind == 4:
             parts.append(f"<{tag} {draw(words)}>")
-        else:
+        elif kind == 5:
             parts.append(f"<{tag}/>")
+        else:
+            q = draw(st.sampled_from(["", "'", '"']))
+            parts.append(f"<a href={q}{draw(st.sampled_from(HREFS))}{q}>{draw(words)}")
     return "".join(parts)
-
-
-@settings(max_examples=200, deadline=None)
-@given(html_soup())
-@example("<a'<p>")
-@example("<a'>'<p>")
-@example("<p><p><p><p><p><p><script><p><</p>")
-def test_parsers_agree_and_never_raise(html):
-    fa = render(parse_html_fast(html))
-    fb = render(parse_html_stdlib(html))
-    assert fa[0] == fb[0]
-    assert [(b.tag, b.start, b.end) for b in fa[1]] == [(b.tag, b.start, b.end) for b in fb[1]]
 
 
 @settings(max_examples=300, deadline=None)
 @given(html_soup())
+@example("<a'<p>")
+@example("<a'>'<p>")
+@example("<p><p><p><p><p><p><script><p><</p>")
 @example("<p>" * 19 + "<a>< <")  # bogus-'<' event segmentation (round-1 red)
 @example("< < a< b <")
 @example("<figcaption/>>")  # self-close slash eaten by tolerant attrs
@@ -74,12 +77,14 @@ def test_parsers_agree_and_never_raise(html):
 @example("<style/e><v -='</style><g'>")  # cdata close lands inside a token
 @example("<!----\t>")  # comments close at --\s*>
 @example("<TR>B")  # tag case-folding on the single-pass path
+@example("<div>a</ div>b<p>c</p\x0b>d")  # whitespace around an end-tag name
+@example("<script>a</script x>b")  # raw text closes only at </script\s*>
+@example("<noscript><b <p>x</noscript>y")  # recovery inside a skipped subtree
+@example("<tr><p>a<tr><h2>b")  # <tr> after a <p> closes only the <p>
 def test_single_pass_render_matches_tree(html):
     """The no-tree fast path must be event-for-event equal to the stdlib
     tree path: same raw text, same blocks, same relationships/cell fields."""
-    from ocr_machine_spark.core.htmlparse import render_html
-
-    fa = render_html(html)
+    fa = render_page(html)
     fb = render(parse_html_stdlib(html))
     assert fa[0] == fb[0]
     ka = [(b.tag, b.depth, b.start, b.end, b.link_chars, b.struck_spans,
@@ -87,6 +92,43 @@ def test_single_pass_render_matches_tree(html):
     kb = [(b.tag, b.depth, b.start, b.end, b.link_chars, b.struck_spans,
            b.boiler, b.in_table, b.row_idx, b.col_idx) for b in fb[1]]
     assert ka == kb
+
+
+def _outlinks_oracle(html: str, base: str) -> list[tuple[str, str]]:
+    """outlinks_one re-derived from the stdlib tree: pre-order <a> with a
+    resolvable href; anchor text = every descendant text run, with a space
+    at each element boundary, then whitespace-collapsed. Adjacent text
+    children are concatenated, not space-joined: html.parser splits one
+    data run at every bare '<', which the anchor text must not see."""
+    out: list[tuple[str, str]] = []
+
+    def runs(el) -> str:
+        return "".join(c if isinstance(c, str) else f" {runs(c)} " for c in el.children)
+
+    def walk(el) -> None:
+        for c in el.children:
+            if isinstance(c, str):
+                continue
+            if c.tag == "a":
+                href = resolve_href(base, c.attrs.get("href") or "")
+                if href is not None:
+                    out.append((href, " ".join(runs(c).split())))
+            walk(c)
+
+    walk(parse_html_stdlib(html))
+    return out
+
+
+@settings(max_examples=300, deadline=None)
+@given(html_soup())
+@example("<a href=/1>x<a href=/2>y</a>z</a>")  # nested anchors both reported
+@example("<a href=/x>x< y<b =")  # bare '<' and failed-tag chunks in one run
+@example("<a href=/x>p<script>q</script>r<script>unclosed")
+@example("<a \n!\n='?=><p href=\"/a\">'>t</a>")  # href inside a quoted value
+@example("<noscript><a href=y.html>n</a></noscript>")
+def test_outlinks_match_tree_oracle(html):
+    base = "https://h.example/d/p.html"
+    assert outlinks_one(html, base) == _outlinks_oracle(html, base)
 
 
 @settings(max_examples=200, deadline=None)
