@@ -648,7 +648,7 @@ class _Renderer:
                 rc[1] += 1
                 blk.row_idx, blk.col_idx = rc[0], rc[1]
                 blk.is_header_cell = tag == "th"
-                if isinstance(attrs, str):
+                if isinstance(attrs, str):  # scan's raw source; the tree walk passes a dict
                     attrs = parse_attrs(attrs)
                 if attrs:
                     try:

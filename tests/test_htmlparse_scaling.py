@@ -36,7 +36,10 @@ FAMILIES = {
         lambda n: f"<table><tr><td {_attr_list(n)} colspan=2>x</td></tr></table>",
         8000,
     ),
-    "entity_flood": (lambda n: "<p><a href=/x>" + "&amp;&lt;&#x41;&eacute; " * n + "</a></p>", 2000),
+    "entity_flood": (
+        lambda n: "<p><a href=/x>" + "&amp;&lt;&#x41;&eacute; " * n + "</a></p>",
+        2000,
+    ),
 }
 
 SINKS = {

@@ -43,8 +43,9 @@ def html_soup(draw):
         if kind == 0:
             parts.append(f"<{tag}>")
         elif kind == 1:
-            pad = st.sampled_from(["", "", " ", "\t", "\x0b", " x"])
-            parts.append(f"</{draw(pad).rstrip('x')}{tag}{draw(pad)}>")
+            lead = draw(st.sampled_from(["", "", " ", "\t", "\x0b"]))
+            trail = draw(st.sampled_from(["", "", " ", "\x0b", " x"]))
+            parts.append(f"</{lead}{tag}{trail}>")
         elif kind == 2:
             parts.append(draw(words))
         elif kind == 3:
