@@ -55,6 +55,8 @@ import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from scaling import _steal_total  # noqa: E402
 
 N_VECS = int(os.environ.get("IVF_SKEW_N", "1200000"))
 DIM = int(os.environ.get("IVF_SKEW_DIM", "16"))
@@ -65,18 +67,6 @@ CORES = int(os.environ.get("IVF_SKEW_CORES", "8"))
 REPS = int(os.environ.get("IVF_SKEW_REPS", "2"))
 SALT = int(os.environ.get("IVF_SKEW_SALT", "64"))
 K = 10
-
-
-def _steal_total(cores: int) -> tuple[float, float]:
-    want = {f"cpu{i}" for i in range(cores)}
-    steal = total = 0.0
-    for line in open("/proc/stat"):
-        parts = line.split()
-        if parts and parts[0] in want:
-            vals = [float(x) for x in parts[1:]]
-            steal += vals[7] if len(vals) > 7 else 0.0
-            total += sum(vals)
-    return steal, total
 
 
 def _skewed_embeddings(spark, n: int):

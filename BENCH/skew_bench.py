@@ -34,24 +34,14 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from scaling import _steal_total  # noqa: E402
 
 N_PAGES = int(os.environ.get("SKEW_PAGES", "40000"))
 MEGA_SHARE = 85  # % of pages forced onto one host
 CORES = int(os.environ.get("SKEW_CORES", "8"))
 REPS = int(os.environ.get("SKEW_REPS", "2"))
 HOST_RE = r"^https?://([^/]+)"
-
-
-def _steal_total(cores: int) -> tuple[float, float]:
-    want = {f"cpu{i}" for i in range(cores)}
-    steal = total = 0.0
-    for line in open("/proc/stat"):
-        parts = line.split()
-        if parts and parts[0] in want:
-            vals = [float(x) for x in parts[1:]]
-            steal += vals[7] if len(vals) > 7 else 0.0
-            total += sum(vals)
-    return steal, total
 
 
 def _skew_pages(spark, n: int):

@@ -54,10 +54,13 @@ def jaccard_pairs(
     text: str = "text",
     max_docs: int | None = 100_000,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similar pairs (a < b, J ≥ threshold).
+    """N-gram Jaccard similar pairs (a < b, J ≥ threshold), exact up to
+    64-bit shingle-hash collisions: the pairs are counted on xxhash64
+    shingle keys, so two different shingles of two documents that share a
+    hash count as one shared shingle.
 
-    Shape: shingle-explode → self-equi-join on shingle (sort-merge/shuffled
-    hash on the shingle key — never a cross join) → per-pair intersection
+    Shape: shingle-explode → self-equi-join on the shingle hash
+    (sort-merge/shuffled hash — never a cross join) → per-pair intersection
     count → J = |∩| / (|A|+|B|−|∩|).
 
     THIS IS THE EXACT TIER: cost is quadratic in co-shingle pairs, so

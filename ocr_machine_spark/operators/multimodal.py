@@ -38,8 +38,6 @@ MEDIA_SCHEMA = (
 
 FEATURES_SCHEMA = "media_id long, kind string, ok boolean, features array<double>, n_bytes long"
 
-FRAMES_SCHEMA = "media_id long, frame_idx int, offset_ms int"
-
 
 def generate_media(spark: SparkSession, n: int, partitions: int = 8) -> DataFrame:
     """Deterministic media table with REAL payloads: BMP/PNG/JPEG images

@@ -418,7 +418,7 @@ _GOPHER_RULES = [
 ]
 
 
-def gopher_filter(docs: DataFrame, text: str = "text", **overrides) -> DataFrame:
+def gopher_filter(docs: DataFrame, text: str = "text") -> DataFrame:
     """The curation DECISION the repetition stats exist for: apply the
     complete Gopher rule set and emit (doc_id, n_words, keep, reasons) —
     ``reasons`` is the comma-joined list of failed rules in fixed order
@@ -431,7 +431,6 @@ def gopher_filter(docs: DataFrame, text: str = "text", **overrides) -> DataFrame
     ``repetition_stats``, so each threshold comparison is BIGINT vs BIGINT —
     byte-identical decisions on Spark and the SQL twin. One extra narrow
     join against the stats; the text column is scanned once."""
-    cfg = {**GOPHER_DEFAULTS, **overrides}
     stats = repetition_stats(docs, text)
     tx = norm_text(text)
     toks = token_count(tx)
@@ -447,7 +446,7 @@ def gopher_filter(docs: DataFrame, text: str = "text", **overrides) -> DataFrame
         "top_bigram_share_e4", "dup_5gram_char_frac_e4", "mwl_e4",
     )}
     reason_cols = [
-        F.when(pred(cols, cfg), F.lit(name)) for name, pred in _GOPHER_RULES
+        F.when(pred(cols, GOPHER_DEFAULTS), F.lit(name)) for name, pred in _GOPHER_RULES
     ]
     reasons = F.concat_ws(",", *reason_cols)  # concat_ws skips NULLs
     return s.select(

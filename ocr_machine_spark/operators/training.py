@@ -50,7 +50,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 GRAD_SCALE = 1_000_000  # e6 fixed-point for gradient contributions
-LOSS_SCALE = 10_000  # e4 fixed-point for loss folds
 THRESHOLD = 0.5  # classifier decision boundary (model_inference_test.py:100)
 
 

@@ -105,13 +105,6 @@ def _read_lineage_or_none(spark: SparkSession, out_dir: str) -> DataFrame | None
         raise
 
 
-def committed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
-    lin = _read_lineage_or_none(spark, out_dir)
-    if lin is None:
-        return []
-    return sorted(r[0] for r in lin.select("partition_id").distinct().collect())
-
-
 def run_extraction(
     spark: SparkSession,
     pages: DataFrame,
@@ -227,14 +220,20 @@ def run_extraction(
 
 def _current_snapshot(spark: SparkSession, table: str) -> int:
     """Latest Iceberg snapshot id for the WAP audit trail; -1 when the
-    metadata table is unavailable (e.g. dispatch-only sandbox)."""
+    snapshots metadata table does not exist (e.g. dispatch-only sandbox).
+    ONLY that error means "no snapshot id" — any other failure propagates,
+    the same rule as ``_read_lineage_or_none``."""
+    from pyspark.errors import AnalysisException
+
     try:
         row = spark.sql(
             f"SELECT snapshot_id FROM {table}.snapshots ORDER BY committed_at DESC LIMIT 1"
         ).first()
-        return int(row[0]) if row is not None else -1
-    except Exception:
-        return -1
+    except AnalysisException as e:
+        if e.getCondition() == "TABLE_OR_VIEW_NOT_FOUND":
+            return -1
+        raise
+    return int(row[0]) if row is not None else -1
 
 
 def read_extractions(spark: SparkSession, out_dir: str, *, table: str | None = None) -> DataFrame:

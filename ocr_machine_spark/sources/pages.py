@@ -223,11 +223,3 @@ def outlink_golden_parquet(n: int, seed: int = 42, base_dir: str = "/tmp/ocr_mac
     pq.write_table(tbl, tmp)
     os.replace(tmp, path)
     return path
-
-
-def write_pages(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
-
-
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

@@ -161,6 +161,22 @@ def test_lineage_empty_input_run(spark, tmp_path):
     assert s["buckets_committed"] == 8 and s["rows"] == 0 and s["pages_ok"] == 0
 
 
+def test_current_snapshot_only_missing_table_means_none(spark):
+    """The Iceberg snapshot lookup reads a missing snapshots table as -1 and
+    lets every other error propagate: a failing catalog must not commit
+    lineage rows with a made-up snapshot id."""
+    from ocr_machine_spark.plans.lineage import _current_snapshot
+
+    assert _current_snapshot(spark, "no_such_table") == -1
+
+    class Broken:
+        def sql(self, query):
+            raise RuntimeError("catalog unreachable")
+
+    with pytest.raises(RuntimeError, match="catalog unreachable"):
+        _current_snapshot(Broken(), "cat.db.tbl")
+
+
 def test_repartition_salted_spreads_duplicate_keys(spark):
     """Review fix: the salt must vary WITHIN a key — a key-derived salt is a
     no-op (it induces the key's own partition classes), so 1000 rows sharing
@@ -367,3 +383,54 @@ def test_curation_dedup_near(spark, tmp_path):
     assert {k: v for k, v in s2.items() if k != "run_id"} == {
         k: v for k, v in s1.items() if k != "run_id"
     }
+
+
+def test_curation_full_ladder_reconciles(spark, tmp_path):
+    """Every rung at once (line, span and near dedup plus decontamination):
+    the decision table's columns in order (the benchmark digest hashes them
+    in this order), the exact stats keys, and each stat reconciled with the
+    decisions read back."""
+    from collections import Counter
+
+    from ocr_machine_spark.plans.curate import run_curation
+
+    footer = "subscribe to our newsletter for weekly updates"
+    bodies = {i: " ".join(f"d{i:02d}w{j:02d}x" for j in range(30)) for i in range(40)}
+    rows = [(i, f"{b}\n{footer}") for i, b in bodies.items()]
+    rows += [(100 + i, rows[i][1]) for i in range(5)]  # exact copies
+    rows += [(200, "tiny doc")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    bench = spark.createDataFrame([(bodies[7],), (bodies[9],)], "text string")
+    out = str(tmp_path / "ladder")
+    stats = run_curation(
+        spark, docs, out, run_id="all",
+        dedup_lines=True, dedup_spans=True, dedup_near=True, bench=bench,
+    )
+    dec = spark.read.parquet(f"{out}/decisions")
+    assert dec.columns == [
+        "doc_id", "n_words", "keep", "reasons", "fp", "survivor", "near_rep",
+        "contaminated", "n_lines", "n_lines_kept", "n_span_words", "n_span_kept",
+    ]
+    assert set(stats) == {
+        "run_id", "docs_in", "docs_quality_kept", "docs_curated", "drop_reasons",
+        "lines_in", "lines_kept", "docs_near_dropped", "span_words_in",
+        "span_words_kept", "docs_contaminated",
+    }
+    rows = dec.collect()
+    assert stats["docs_in"] == len(rows) == 46
+    assert stats["docs_quality_kept"] == sum(r["keep"] for r in rows)
+    assert stats["docs_curated"] == sum(r["survivor"] for r in rows)
+    assert stats["lines_in"] == sum(r["n_lines"] for r in rows)
+    assert stats["lines_kept"] == sum(r["n_lines_kept"] for r in rows)
+    assert stats["span_words_in"] == sum(r["n_span_words"] for r in rows)
+    assert stats["span_words_kept"] == sum(r["n_span_kept"] for r in rows)
+    assert stats["docs_near_dropped"] == sum(
+        r["near_rep"] is not None and r["near_rep"] != r["doc_id"] for r in rows
+    )
+    assert stats["docs_contaminated"] == sum(r["contaminated"] for r in rows) == 2
+    assert stats["lines_kept"] == 42  # 40 bodies, the footer once, "tiny doc"
+    assert stats["docs_curated"] == 38  # copies emptied, 2 contaminated
+    assert stats["drop_reasons"] == dict(sorted(Counter(
+        reason for r in rows if not r["keep"] for reason in r["reasons"].split(",")
+    ).items()))
+    assert spark.read.parquet(f"{out}/curated").count() == stats["docs_curated"]
