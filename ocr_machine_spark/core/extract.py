@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import codecs
 import re
+from bisect import bisect_left
 from dataclasses import dataclass, field
 
 from ocr_machine_spark.core.htmlparse import block_type_of, parse_attrs, render_page, scan
@@ -334,6 +335,10 @@ def extract_one(html: bytes | str | None, want_blocks: bool = False) -> ExtractR
 # page URL. Feeds operators.graphs.host_pagerank.
 # ---------------------------------------------------------------------------
 
+# raw text one anchor keeps, before the whitespace collapse: nested unclosed
+# anchors would otherwise each carry the rest of the page (quadratic output)
+ANCHOR_TEXT_CAP = 4096
+
 _SCHEME_AUTH_RE = re.compile(r"^([A-Za-z][A-Za-z0-9+.\-]*:)//([^/?#]*)")
 _HAS_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 
@@ -391,7 +396,9 @@ def outlinks_one(html: bytes | str | None, base_url: str) -> list[tuple[str, str
     Every ``<a>`` with a resolvable href counts, nested ones included. Its
     anchor text is the text inside it with one space at each element
     boundary, whitespace-collapsed — so ``<a>p<script>q</script>r</a>`` gives
-    "p q r", however the tokenizer happens to chunk a text run.
+    "p q r", however the tokenizer happens to chunk a text run. Only the
+    first ``ANCHOR_TEXT_CAP`` chars of that raw text are kept, so each anchor
+    costs O(cap) however deeply anchors nest.
 
     Same decode path as extract_one (charset sniff, errors="replace");
     malformed pages yield [] rather than raising — a page with no parseable
@@ -401,10 +408,15 @@ def outlinks_one(html: bytes | str | None, base_url: str) -> list[tuple[str, str
     out: list[tuple[str, str]] = []
     anchors: list[tuple[int, int]] = []  # per open <a>: (slot in out or -1, start in runs)
     runs: list[str] = []  # text inside open anchors; " " marks an element boundary
+    ends = [0]  # ends[i]: chars in runs[:i]
+
+    def push(s: str) -> None:
+        runs.append(s)
+        ends.append(ends[-1] + len(s))
 
     def enter(tag: str, depth: int, raw_attrs: str) -> None:
         if anchors:
-            runs.append(" ")
+            push(" ")
         if tag == "a":
             href = resolve_href(base_url, parse_attrs(raw_attrs).get("href", ""))
             slot = -1
@@ -417,15 +429,20 @@ def outlinks_one(html: bytes | str | None, base_url: str) -> list[tuple[str, str
         if tag == "a":
             slot, start = anchors.pop()
             if slot >= 0:
-                out[slot] = (out[slot][0], " ".join("".join(runs[start:]).split()))
+                # the runs that hold the anchor's first ANCHOR_TEXT_CAP chars;
+                # no run is longer than the cap, so the join is O(cap)
+                stop = bisect_left(ends, ends[start] + ANCHOR_TEXT_CAP, start)
+                raw = "".join(runs[start:stop])[:ANCHOR_TEXT_CAP]
+                out[slot] = (out[slot][0], " ".join(raw.split()))
             if not anchors:
                 runs.clear()
+                del ends[1:]
         if anchors:
-            runs.append(" ")
+            push(" ")
 
     def text(s: str) -> None:
         if anchors:
-            runs.append(s)
+            push(s[:ANCHOR_TEXT_CAP])  # no anchor keeps more of one run
 
     try:
         if html is None:

@@ -13,6 +13,10 @@ structural:
 * per bucket, data files are written first (dynamic partition overwrite, so a
   re-run of a crashed bucket replaces its orphans), then the bucket's lineage
   row is appended — the lineage row IS the commit marker;
+* the write clusters the extracted rows by bucket first, so each bucket is
+  ONE data file per run, not one per task that saw it (tasks × buckets small
+  files, all listed and read back by the commit); an Iceberg table gets the
+  same from its ``write.distribution-mode=hash`` property;
 * readers go through ``read_extractions``, which inner-joins data partitions
   against committed lineage, so half-written buckets are invisible.
 
@@ -74,15 +78,22 @@ def write_bucketed(df: DataFrame, spark: SparkSession, *, path: str, table: str 
     Iceberg path: ``writeTo(table).overwritePartitions()`` — an atomic
     snapshot commit that replaces exactly the buckets present in ``df``
     (write-audit-publish; crashed-bucket re-runs replace their orphans).
+    The table's ``write.distribution-mode=hash`` property clusters the rows
+    by bucket before that write.
     Parquet path: dynamic partition overwrite — the same replace-by-bucket
     semantics, minus the snapshot atomicity, which the lineage commit marker
-    restores at read time."""
+    restores at read time. The rows are hash-partitioned by bucket into
+    ``defaultParallelism`` tasks first, so each bucket lands in one task and
+    is one file per run; the shuffle moves extracted rows, not HTML. Write
+    parallelism is then min(buckets, cores), so a job wants at least as many
+    buckets as cores."""
     sink = choose_sink(spark, table)
     if sink == "iceberg":
         df.writeTo(table).overwritePartitions()
     else:
         (
-            df.write.mode("overwrite")
+            df.repartition(spark.sparkContext.defaultParallelism, "bucket")
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(path)

@@ -368,6 +368,24 @@ def test_outlinks_one_document_order_and_nesting():
     ]
 
 
+def test_outlinks_one_caps_anchor_text():
+    """Each anchor keeps the first 4096 chars of its raw text, cut before the
+    whitespace collapse, so nested unclosed anchors stay linear in output."""
+    from ocr_machine_spark.core.extract import ANCHOR_TEXT_CAP, outlinks_one
+
+    assert ANCHOR_TEXT_CAP == 4096
+    base = "https://h.example/"
+    # 4096 raw chars = 1365 × "ab " + "a": the cut lands inside a word
+    assert outlinks_one("<a href=/x>" + "ab " * 2000 + "</a>", base) == [
+        ("https://h.example/x", " ".join(["ab"] * 1365 + ["a"]))
+    ]
+    # every nesting level adds "w" plus two spaces of raw text to the anchors
+    # around it, so an anchor with m levels inside keeps min(m, 1366) words
+    n = 2000
+    links = outlinks_one("<a href=/x>w " * n, base)
+    assert links == [("https://h.example/x", " ".join(["w"] * min(n - k, 1366))) for k in range(n)]
+
+
 def test_outlinks_one_total_on_garbage():
     from ocr_machine_spark.core.extract import outlinks_one
 

@@ -40,6 +40,8 @@ FAMILIES = {
         lambda n: "<p><a href=/x>" + "&amp;&lt;&#x41;&eacute; " * n + "</a></p>",
         2000,
     ),
+    # every anchor stays open, so each one's text spans the rest of the page
+    "nested_unclosed_anchors": (lambda n: "<a href=/x>w " * n, 2000),
 }
 
 SINKS = {

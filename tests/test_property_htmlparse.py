@@ -11,7 +11,7 @@ Invariants that must hold for ARBITRARY input, not just fixtures:
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from ocr_machine_spark.core.extract import extract_one, outlinks_one, resolve_href
+from ocr_machine_spark.core.extract import ANCHOR_TEXT_CAP, extract_one, outlinks_one, resolve_href
 from ocr_machine_spark.core.htmlparse import parse_html_stdlib, render, render_page
 
 TAGS = ["p", "div", "li", "ul", "nav", "table", "td", "tr", "a", "del", "b", "h2",
@@ -98,9 +98,10 @@ def test_single_pass_render_matches_tree(html):
 def _outlinks_oracle(html: str, base: str) -> list[tuple[str, str]]:
     """outlinks_one re-derived from the stdlib tree: pre-order <a> with a
     resolvable href; anchor text = every descendant text run, with a space
-    at each element boundary, then whitespace-collapsed. Adjacent text
-    children are concatenated, not space-joined: html.parser splits one
-    data run at every bare '<', which the anchor text must not see."""
+    at each element boundary, cut to ANCHOR_TEXT_CAP chars, then
+    whitespace-collapsed. Adjacent text children are concatenated, not
+    space-joined: html.parser splits one data run at every bare '<', which
+    the anchor text must not see."""
     out: list[tuple[str, str]] = []
 
     def runs(el) -> str:
@@ -113,7 +114,7 @@ def _outlinks_oracle(html: str, base: str) -> list[tuple[str, str]]:
             if c.tag == "a":
                 href = resolve_href(base, c.attrs.get("href") or "")
                 if href is not None:
-                    out.append((href, " ".join(runs(c).split())))
+                    out.append((href, " ".join(runs(c)[:ANCHOR_TEXT_CAP].split())))
             walk(c)
 
     walk(parse_html_stdlib(html))

@@ -1,6 +1,9 @@
 """Spark-layer extraction tests: golden parity, determinism across
 partitioning, blocks/regions, lineage-tracked resume."""
 
+import glob
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -117,6 +120,49 @@ def test_lineage_resume_exactly_once(spark, pages, tmp_path):
     lin = read_lineage(spark, out)
     assert lin.count() == 16
     assert lin.agg(F.sum("rows_in")).collect()[0][0] == N
+
+
+def test_lineage_one_file_per_bucket(spark, pages, tmp_path):
+    """The bucket write clusters rows by bucket, so a run writes one data file
+    per bucket, not one for every task that saw the bucket."""
+    out = str(tmp_path / "files")
+    assert pages.rdd.getNumPartitions() == 4
+    run_extraction(spark, pages, out, run_id="r1", n_buckets=16)
+    dirs = sorted(glob.glob(os.path.join(out, "data", "bucket=*")))
+    assert len(dirs) == 16
+    for d in dirs:
+        assert len(glob.glob(os.path.join(d, "part-*.parquet"))) == 1, d
+
+
+def test_lineage_crash_between_data_write_and_commit(spark, pages, tmp_path):
+    """A run that dies after its data write but before its lineage append
+    leaves orphan files: readers never see them, and the resume overwrites
+    them, so every url is read exactly once with its golden text."""
+    from ocr_machine_spark.operators.extraction import with_bucket
+    from ocr_machine_spark.plans.lineage import _data_path, write_bucketed
+
+    out = str(tmp_path / "crash")
+    s1 = run_extraction(spark, pages, out, run_id="r1", n_buckets=16, max_buckets_this_run=5)
+    committed = sorted(r[0] for r in read_lineage(spark, out).select("partition_id").collect())
+    assert s1["buckets_committed"] == len(committed) == 5
+    # the crashed run: the other 11 buckets' data, from a differently
+    # partitioned input, and no lineage row
+    rest = with_bucket(pages, 16).filter(~F.col("bucket").isin(committed)).drop("bucket")
+    write_bucketed(with_bucket(extract_pages(rest, partitions=7), 16), spark, path=_data_path(out))
+    assert len(glob.glob(os.path.join(out, "data", "bucket=*"))) == 16
+    mid = read_extractions(spark, out)
+    assert sorted(r[0] for r in mid.select("bucket").distinct().collect()) == committed
+    assert mid.count() == s1["rows"]
+    # resume: the committed buckets stay, the orphans are replaced
+    s2 = run_extraction(spark, pages, out, run_id="r2", n_buckets=16)
+    assert s2["buckets_committed"] == 11 and s2["rows"] == N - s1["rows"]
+    done = read_extractions(spark, out)
+    assert done.count() == N
+    assert done.select("url").distinct().count() == N
+    want = generate_goldens(spark, N, partitions=4).select("url", F.col("extracted_text").alias("want"))
+    j = done.join(want, "url")
+    assert j.count() == N
+    assert j.filter(F.col("extracted_text") != F.col("want")).count() == 0
 
 
 def test_lineage_sparse_input_commits_empty_buckets(spark, tmp_path):
