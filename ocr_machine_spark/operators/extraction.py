@@ -22,9 +22,9 @@ Scale notes (100 TB / 10^12 rows):
   KEYED stages (reassembly by url, host aggregations) must NOT salt their
   shuffle key directly — skew there takes the two-phase
   salted-partial-aggregation pattern;
-* the extraction job's one shuffle comes after this stage, at the bucket
-  write (``plans.lineage.write_bucketed`` clusters rows by bucket, one file
-  per bucket): it moves the extracted rows, never the HTML;
+* the extraction job stays shuffle-free through its write:
+  ``plans.lineage.write_bucketed`` sorts each task's rows by bucket and
+  writes one file per task into the run's directory;
 * blocks are exploded only by the analysis layer (``extract_blocks``), never
   on the main extraction path — at 10^12 rows a block explode is ~100× row
   amplification.

@@ -10,33 +10,48 @@ structural:
   size;
 * each run processes only buckets absent from the **lineage table**
   (an anti-join on committed partition ids);
-* per bucket, data files are written first (dynamic partition overwrite, so a
-  re-run of a crashed bucket replaces its orphans), then the bucket's lineage
-  row is appended — the lineage row IS the commit marker;
-* the write clusters the extracted rows by bucket first, so each bucket is
-  ONE data file per run, not one per task that saw it (tasks × buckets small
-  files, all listed and read back by the commit); an Iceberg table gets the
-  same from its ``write.distribution-mode=hash`` property;
-* readers go through ``read_extractions``, which inner-joins data partitions
-  against committed lineage, so half-written buckets are invisible.
+* the bucket is the resume unit, not a directory: each run writes its rows
+  under its own directory, ``data/run_id=<run_id>/``, one file per write
+  task, with ``bucket`` as an ordinary column sorted within each file (tight
+  row-group min/max statistics, so a bucket filter skips row groups). A run
+  costs as many files as the write has tasks and as many lineage rows as it
+  has buckets, so the bucket count is no per-run file or listing cost;
+* data files are written first, then one lineage row per processed bucket is
+  appended — the ``(bucket, run_id)`` lineage row IS the commit marker. A run
+  id is used once; before it writes, a run deletes every run directory that
+  has no lineage row (the orphans of crashed runs; single writer per output);
+* readers go through ``read_extractions``, which semi-joins data against
+  committed lineage on ``(bucket, run_id)``, so half-written runs are
+  invisible even where a later run committed the same buckets.
 
 With an Iceberg catalog this maps 1:1 onto write-audit-publish: data + lineage
-append in one snapshot transaction; the parquet layout here is the sandbox
-stand-in. Lineage schema follows FIXTURES.md §4; stats are aggregated from the
-files actually on disk, so the bench numbers are auditable against lineage.
+append in one snapshot transaction, and the bucket layout belongs to the
+table definition — a ``bucket(N, url)`` hidden-partition transform — rather
+than to this module; the parquet layout here is the sandbox stand-in. Lineage
+schema follows FIXTURES.md §4; stats are aggregated from the files actually on
+disk, so the bench numbers are auditable against lineage.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from ocr_machine_spark.operators.extraction import extract_pages, with_bucket
+from ocr_machine_spark.operators.extraction import EXTRACT_SCHEMA, extract_pages, with_bucket
 
 LINEAGE_DIR = "_lineage"
 DATA_DIR = "data"
+RUN_DIR_PREFIX = "run_id="
+_RUN_ID = re.compile(r"[A-Za-z0-9._-]+")
+# what readers see under data/: the written rows plus the run id the
+# directory name carries — typed string, so a run id "007" stays "007"
+_DATA_SCHEMA = StructType(
+    [*EXTRACT_SCHEMA.fields, StructField("bucket", IntegerType()), StructField("run_id", StringType())]
+)
 
 
 def _lineage_path(out_dir: str) -> str:
@@ -45,6 +60,10 @@ def _lineage_path(out_dir: str) -> str:
 
 def _data_path(out_dir: str) -> str:
     return os.path.join(out_dir, DATA_DIR)
+
+
+def _run_path(out_dir: str, run_id: str) -> str:
+    return os.path.join(_data_path(out_dir), RUN_DIR_PREFIX + run_id)
 
 
 def iceberg_catalog(spark: SparkSession) -> str | None:
@@ -72,32 +91,23 @@ def choose_sink(spark: SparkSession, table: str | None) -> str:
 
 
 def write_bucketed(df: DataFrame, spark: SparkSession, *, path: str, table: str | None = None) -> str:
-    """Write bucket-partitioned extraction data through the chosen sink and
+    """Write bucket-tagged extraction data through the chosen sink and
     return which sink was used.
 
     Iceberg path: ``writeTo(table).overwritePartitions()`` — an atomic
     snapshot commit that replaces exactly the buckets present in ``df``
     (write-audit-publish; crashed-bucket re-runs replace their orphans).
-    The table's ``write.distribution-mode=hash`` property clusters the rows
-    by bucket before that write.
-    Parquet path: dynamic partition overwrite — the same replace-by-bucket
-    semantics, minus the snapshot atomicity, which the lineage commit marker
-    restores at read time. The rows are hash-partitioned by bucket into
-    ``defaultParallelism`` tasks first, so each bucket lands in one task and
-    is one file per run; the shuffle moves extracted rows, not HTML. Write
-    parallelism is then min(buckets, cores), so a job wants at least as many
-    buckets as cores."""
+    The table's ``bucket(N, url)`` partition transform and its
+    ``write.distribution-mode=hash`` property lay the rows out by bucket.
+    Parquet path: ``path`` is overwritten with one file per task of ``df``,
+    rows sorted by bucket within each file so its row-group statistics on
+    ``bucket`` stay tight. No shuffle and no directory per bucket: the
+    file count follows the write's tasks, not the bucket count."""
     sink = choose_sink(spark, table)
     if sink == "iceberg":
         df.writeTo(table).overwritePartitions()
     else:
-        (
-            df.repartition(spark.sparkContext.defaultParallelism, "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
+        df.sortWithinPartitions("bucket").write.mode("overwrite").parquet(path)
     return sink
 
 
@@ -114,6 +124,28 @@ def _read_lineage_or_none(spark: SparkSession, out_dir: str) -> DataFrame | None
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None
         raise
+
+
+def _sweep_orphan_runs(spark: SparkSession, out_dir: str, committed_runs: set[str]) -> None:
+    """Delete every ``data/run_id=*`` directory whose run id has no lineage
+    row: the data of runs that crashed before their commit. Safe under the
+    single-writer assumption the lineage commit already makes. Refuses a
+    ``data/`` that still holds the previous ``bucket=*`` layout."""
+    hadoop_fs = spark._jvm.org.apache.hadoop.fs
+    data = hadoop_fs.Path(_data_path(out_dir))
+    fs = data.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(data):
+        return
+    entries = [st.getPath() for st in fs.listStatus(data)]
+    if any(p.getName().startswith("bucket=") for p in entries):
+        raise ValueError(
+            f"{_data_path(out_dir)} holds bucket=* directories of the per-bucket "
+            "layout; write to a new output directory"
+        )
+    for p in entries:
+        name = p.getName()
+        if name.startswith(RUN_DIR_PREFIX) and name[len(RUN_DIR_PREFIX):] not in committed_runs:
+            fs.delete(p, True)
 
 
 def run_extraction(
@@ -137,20 +169,32 @@ def run_extraction(
     — "committed" means processed, not non-empty. Otherwise sparse inputs
     livelock: a selected-but-empty bucket would never commit, and the next
     resume would select the same empty buckets forever.
+
+    ``run_id`` names the run's data directory, so it must be one path
+    segment of ``[A-Za-z0-9._-]`` and must not have lineage rows yet (a
+    crashed run id has none, so it may be reused).
     """
+    if not _RUN_ID.fullmatch(run_id):
+        raise ValueError(f"run_id {run_id!r} must match [A-Za-z0-9._-]+")
     lin = _read_lineage_or_none(spark, out_dir)
     done: list[int] = []
+    runs: set[str] = set()
     if lin is not None:
+        committed = lin.select("partition_id", "run_id", "n_buckets").collect()
         # resume guard: bucket ids only compose within ONE bucket space —
         # resuming 16-bucket lineage with --buckets 256 would silently skip
         # never-extracted rows and duplicate committed ones
-        prev = [r[0] for r in lin.select("n_buckets").distinct().collect()]
+        prev = sorted({r["n_buckets"] for r in committed})
         if prev and prev != [n_buckets]:
             raise ValueError(
                 f"lineage at {out_dir} was committed with n_buckets={prev}; "
                 f"resume must use the same value (got {n_buckets})"
             )
-        done = sorted(r[0] for r in lin.select("partition_id").distinct().collect())
+        runs = {r["run_id"] for r in committed}
+        if run_id in runs:
+            raise ValueError(f"run_id {run_id!r} already has lineage rows at {out_dir}")
+        done = sorted({r["partition_id"] for r in committed})
+    _sweep_orphan_runs(spark, out_dir, runs)
     bucketed = with_bucket(pages, n_buckets)
     todo = bucketed.filter(~F.col("bucket").isin(done)) if done else bucketed
 
@@ -162,23 +206,22 @@ def run_extraction(
     extracted = extract_pages(todo, partitions=partitions)
     out = with_bucket(extracted, n_buckets)  # same deterministic bucket fn
 
-    # 1) data first — bucket-replacing write (Iceberg snapshot commit when a
-    # catalog is configured; parquet dynamic overwrite otherwise), so a
-    # re-run of a crashed bucket replaces its orphans
-    sink = write_bucketed(out, spark, path=_data_path(out_dir), table=table)
+    # 1) data first, into this run's own directory (Iceberg snapshot commit
+    # when a catalog is configured)
+    sink = write_bucketed(out, spark, path=_run_path(out_dir, run_id), table=table)
 
     # 2) lineage from what's actually committed (auditable), written last.
     # Read back through the SINK that was written: the Iceberg table when a
-    # catalog took the data, else the parquet dir — with an explicit schema,
-    # so an empty first run (only _SUCCESS on disk) reads as zero rows
-    # instead of failing schema inference.
+    # catalog took the data, else this run's directory, which holds only
+    # this run's rows — with an explicit schema, so an empty first run (only
+    # _SUCCESS on disk) reads as zero rows instead of failing schema
+    # inference.
     if sink == "iceberg":
-        written = spark.table(table)
+        written = spark.table(table).filter(F.col("bucket").isin(processed))
         snapshot = _current_snapshot(spark, table)
     else:
-        written = spark.read.schema(out.schema).parquet(_data_path(out_dir))
+        written = spark.read.schema(out.schema).parquet(_run_path(out_dir, run_id))
         snapshot = -1  # parquet sand-box stand-in has no snapshot ids
-    written = written.filter(F.col("bucket").isin(processed))
     agg_rows = written.groupBy("bucket").agg(
         F.count("*").alias("rows_out"),
         F.sum(F.col("ok").cast("long")).alias("pages_ok"),
@@ -248,17 +291,20 @@ def _current_snapshot(spark: SparkSession, table: str) -> int:
 
 
 def read_extractions(spark: SparkSession, out_dir: str, *, table: str | None = None) -> DataFrame:
-    """Committed rows only: data ⋉ lineage on partition id (semi-join keeps
-    half-written buckets invisible, exactly-once semantics for readers).
+    """Committed rows only: data ⋉ lineage (semi-join keeps half-written
+    runs invisible, exactly-once semantics for readers). The parquet sink
+    joins on ``(bucket, run_id)``, so a crashed run's rows stay invisible
+    even after a later run commits the same buckets; the Iceberg table
+    overwrites by bucket, so there it joins on ``bucket``.
     Pass the same ``table`` the writer used when an Iceberg catalog took the
     data — the parquet dir under ``out_dir`` only exists for the parquet
     sink."""
+    lin = spark.read.parquet(_lineage_path(out_dir)).withColumnRenamed("partition_id", "bucket")
     if table is not None and choose_sink(spark, table) == "iceberg":
-        data = spark.table(table)
+        data, keys = spark.table(table), ["bucket"]
     else:
-        data = spark.read.parquet(_data_path(out_dir))
-    lin = spark.read.parquet(_lineage_path(out_dir)).select(F.col("partition_id").alias("bucket")).distinct()
-    return data.join(F.broadcast(lin), "bucket", "left_semi")
+        data, keys = spark.read.schema(_DATA_SCHEMA).parquet(_data_path(out_dir)), ["bucket", "run_id"]
+    return data.join(F.broadcast(lin.select(*keys).distinct()), keys, "left_semi")
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:

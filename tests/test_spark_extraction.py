@@ -122,24 +122,29 @@ def test_lineage_resume_exactly_once(spark, pages, tmp_path):
     assert lin.agg(F.sum("rows_in")).collect()[0][0] == N
 
 
-def test_lineage_one_file_per_bucket(spark, pages, tmp_path):
-    """The bucket write clusters rows by bucket, so a run writes one data file
-    per bucket, not one for every task that saw the bucket."""
+def test_lineage_one_directory_per_run(spark, pages, tmp_path):
+    """A run writes one directory, not one per bucket: at most one data file
+    per input partition, each sorted by bucket so its row-group statistics
+    on bucket stay tight."""
+    import pyarrow.parquet as pq
+
     out = str(tmp_path / "files")
     assert pages.rdd.getNumPartitions() == 4
     run_extraction(spark, pages, out, run_id="r1", n_buckets=16)
-    dirs = sorted(glob.glob(os.path.join(out, "data", "bucket=*")))
-    assert len(dirs) == 16
-    for d in dirs:
-        assert len(glob.glob(os.path.join(d, "part-*.parquet"))) == 1, d
+    assert os.listdir(os.path.join(out, "data")) == ["run_id=r1"]
+    files = glob.glob(os.path.join(out, "data", "run_id=r1", "part-*.parquet"))
+    assert 0 < len(files) <= 4
+    for f in files:
+        b = pq.read_table(f, columns=["bucket"]).column("bucket").to_pylist()
+        assert b == sorted(b), f
 
 
 def test_lineage_crash_between_data_write_and_commit(spark, pages, tmp_path):
     """A run that dies after its data write but before its lineage append
-    leaves orphan files: readers never see them, and the resume overwrites
-    them, so every url is read exactly once with its golden text."""
+    leaves an orphan run directory: readers never see it, and the resume
+    deletes it, so every url is read exactly once with its golden text."""
     from ocr_machine_spark.operators.extraction import with_bucket
-    from ocr_machine_spark.plans.lineage import _data_path, write_bucketed
+    from ocr_machine_spark.plans.lineage import _run_path, write_bucketed
 
     out = str(tmp_path / "crash")
     s1 = run_extraction(spark, pages, out, run_id="r1", n_buckets=16, max_buckets_this_run=5)
@@ -148,14 +153,15 @@ def test_lineage_crash_between_data_write_and_commit(spark, pages, tmp_path):
     # the crashed run: the other 11 buckets' data, from a differently
     # partitioned input, and no lineage row
     rest = with_bucket(pages, 16).filter(~F.col("bucket").isin(committed)).drop("bucket")
-    write_bucketed(with_bucket(extract_pages(rest, partitions=7), 16), spark, path=_data_path(out))
-    assert len(glob.glob(os.path.join(out, "data", "bucket=*"))) == 16
+    crashed = _run_path(out, "crashed")
+    write_bucketed(with_bucket(extract_pages(rest, partitions=7), 16), spark, path=crashed)
     mid = read_extractions(spark, out)
     assert sorted(r[0] for r in mid.select("bucket").distinct().collect()) == committed
     assert mid.count() == s1["rows"]
-    # resume: the committed buckets stay, the orphans are replaced
+    # resume: the committed buckets stay, the orphan run is deleted
     s2 = run_extraction(spark, pages, out, run_id="r2", n_buckets=16)
     assert s2["buckets_committed"] == 11 and s2["rows"] == N - s1["rows"]
+    assert not os.path.exists(crashed)
     done = read_extractions(spark, out)
     assert done.count() == N
     assert done.select("url").distinct().count() == N
@@ -163,6 +169,44 @@ def test_lineage_crash_between_data_write_and_commit(spark, pages, tmp_path):
     j = done.join(want, "url")
     assert j.count() == N
     assert j.filter(F.col("extracted_text") != F.col("want")).count() == 0
+
+
+def test_lineage_task_fails_mid_write(spark, pages, tmp_path):
+    """One task of the write job raises while the others run: the run
+    raises and commits nothing, readers see what they saw before, and the
+    same run id then resumes on the clean input to exactly-once output."""
+    from pyspark.errors import PythonException
+
+    from ocr_machine_spark.operators.extraction import with_bucket
+
+    out = str(tmp_path / "taskfail")
+    run_extraction(spark, pages, out, run_id="r1", n_buckets=16, max_buckets_this_run=5)
+    committed = [r[0] for r in read_lineage(spark, out).select("partition_id").collect()]
+    before = sorted(r["url"] for r in read_extractions(spark, out).select("url").collect())
+    poison = (
+        with_bucket(pages, 16).filter(~F.col("bucket").isin(committed)).orderBy("url").first()["url"]
+    )
+
+    def fail_on_poison(batches):
+        for batch in batches:
+            if poison in batch.column("url").to_pylist():
+                raise RuntimeError(f"injected task failure at {poison}")
+            yield batch
+
+    poisoned = pages.mapInArrow(fail_on_poison, schema=pages.schema)
+    with pytest.raises(PythonException, match="injected task failure"):
+        run_extraction(spark, poisoned, out, run_id="r2", n_buckets=16)
+    lin = read_lineage(spark, out)
+    assert lin.filter(F.col("run_id") == "r2").count() == 0
+    assert sorted(r["url"] for r in read_extractions(spark, out).select("url").collect()) == before
+
+    s2 = run_extraction(spark, pages, out, run_id="r2", n_buckets=16)
+    assert s2["buckets_committed"] == 11
+    done = read_extractions(spark, out)
+    assert done.count() == N
+    assert done.select("url").distinct().count() == N
+    runs = {r["run_id"] for r in read_lineage(spark, out).select("run_id").collect()}
+    assert sorted(os.listdir(os.path.join(out, "data"))) == sorted(f"run_id={r}" for r in runs)
 
 
 def test_lineage_sparse_input_commits_empty_buckets(spark, tmp_path):
@@ -205,6 +249,30 @@ def test_lineage_empty_input_run(spark, tmp_path):
     none = generate_pages(spark, 3, partitions=1).filter("url IS NULL")  # empty frame
     s = run_extraction(spark, none, out, run_id="r1", n_buckets=8)
     assert s["buckets_committed"] == 8 and s["rows"] == 0 and s["pages_ok"] == 0
+
+
+def test_lineage_guards_run_id_and_old_layout(spark, pages, tmp_path):
+    """A run id names a data directory: it must be one safe path segment
+    and used once. An output written in the per-bucket directory layout is
+    refused, not mixed. Run ids stay strings through data and lineage."""
+    out = str(tmp_path / "ids")
+    run_extraction(spark, pages, out, run_id="1", n_buckets=16, max_buckets_this_run=5)
+    run_extraction(spark, pages, out, run_id="007", n_buckets=16)
+    with pytest.raises(ValueError, match="already has lineage rows"):
+        run_extraction(spark, pages, out, run_id="007", n_buckets=16)
+    for bad in ("", "a/b", "../x", "run_id=x", "r 1"):
+        with pytest.raises(ValueError, match="must match"):
+            run_extraction(spark, pages, out, run_id=bad, n_buckets=16)
+    done = read_extractions(spark, out)
+    assert done.schema["run_id"].dataType.simpleString() == "string"
+    assert {r[0] for r in done.select("run_id").distinct().collect()} == {"1", "007"}
+    assert done.count() == N
+    assert {r[0] for r in read_lineage(spark, out).select("run_id").distinct().collect()} == {"1", "007"}
+
+    old = tmp_path / "old"
+    (old / "data" / "bucket=0").mkdir(parents=True)
+    with pytest.raises(ValueError, match="bucket="):
+        run_extraction(spark, pages, str(old), run_id="r1", n_buckets=16)
 
 
 def test_current_snapshot_only_missing_table_means_none(spark):
