@@ -1701,7 +1701,7 @@ def _doc_repetition_stats(spark, sf_dir):
     """Gopher repetition signals, complete §A1.1 set (Rae et al. 2021):
     duplicate-word fraction, duplicate-line fraction, top 2/3/4-gram shares,
     duplicate-5-gram character fraction — published webtext-curation rules,
-    computed relationally (operators/textstats.py:repetition_stats)."""
+    computed in-row, shuffle-free (operators/textstats.py:repetition_stats)."""
     docs = _t(spark, sf_dir, "documents")
     raw = F.coalesce(F.col("text"), F.lit(""))
     head = F.array_join(F.slice(F.split(raw, " "), 1, REP_HEAD_WORDS), " ")

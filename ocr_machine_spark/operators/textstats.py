@@ -251,6 +251,111 @@ def pii_scrub(docs: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
+def _shingles_sql(ws: str, k: int) -> str:
+    """SQL form of ``functions.word_shingles`` over a word-array column: k−1
+    shifted slices zipped, each slice outside the lambda, so O(k·words)."""
+    cur = ws
+    for j in range(1, k):
+        tail = f"slice({ws}, {j + 1}, greatest(size({ws}) - {j}, 0))"
+        cur = f"zip_with({cur}, {tail}, (a, b) -> concat(a, ' ', b))"
+    return f"CASE WHEN size({ws}) >= {k} THEN slice({cur}, 1, size({ws}) - {k - 1}) ELSE array() END"
+
+
+def _top_count_sql(g: str) -> str:
+    """Count of the most frequent element of the sorted array ``g`` (0 when
+    empty): one walk that tracks the current run of equal neighbours."""
+    run = "IF(x = acc.prev, acc.run + 1, 1L)"
+    return (
+        f"aggregate({g}, named_struct('prev', CAST(NULL AS STRING), 'run', 0L, 'top', 0L), "
+        f"(acc, x) -> named_struct('prev', x, 'run', {run}, 'top', greatest(acc.top, {run})), "
+        "acc -> acc.top)"
+    )
+
+
+def _repetition(docs: DataFrame, text: str) -> DataFrame:
+    """Every Gopher signal of ``repetition_stats`` plus ``mwl_e4``, as
+    narrow projections over each row's own arrays: no explode, no shuffle,
+    O(words log words) per row.
+
+    Each projection materialises what the next one's lambdas read: an
+    expression inside a lambda is re-evaluated per element (the
+    ``winnow_fingerprints`` lesson), a column reference is not. Catalyst
+    merges two projections when the later one reads each costly column only
+    once, so every array materialised here is read at least twice
+    (``tests/test_textstats_scaling.py`` guards the result). The
+    array stages are SQL text, parsed once in the JVM: built as Python
+    ``Column`` lambdas, the same stages took 0.57 s of driver time per call
+    against 0.14 s (sf0.1 documents, 4-core x86 host)."""
+    raw = F.coalesce(F.col(text), F.lit(""))
+    # normalise and split once per row
+    w = docs.select(
+        "doc_id",
+        norm_text(text).alias("tx"),
+        F.filter(F.split(raw, "\n"), lambda x: x != F.lit("")).alias("lines"),
+    ).selectExpr("doc_id", "tx", "split(tx, ' ') AS ws", "lines")
+    # word lengths, sorted 2/3/4-grams, and each 5-gram with its 0-based
+    # position sorted by (gram, position), so repeats are neighbours
+    w = w.selectExpr(
+        "doc_id", "tx", "ws", "lines",
+        "transform(ws, x -> CAST(length(x) AS BIGINT)) AS wl",
+        *(f"sort_array({_shingles_sql('ws', n)}) AS g{n}" for n in (2, 3, 4)),
+        f"sort_array(transform({_shingles_sql('ws', 5)}, (g, i) -> named_struct('g', g, 'p', i))) AS s5",
+    )
+    # eq5[j]: the j-th sorted 5-gram equals the next one (false for the last)
+    w = w.selectExpr(
+        "*", "zip_with(s5, slice(s5, 2, size(s5)), (a, b) -> coalesce(a.g = b.g, false)) AS eq5"
+    )
+    # a 5-gram is repeated when it equals either neighbour; it covers words
+    # p+1..p+5, each counted once
+    rep = "zip_with(eq5, concat(array(false), eq5), (a, b) -> a OR b)"
+    pos = f"filter(zip_with(s5, {rep}, (x, r) -> IF(r, x.p, NULL)), p -> p IS NOT NULL)"
+    covered = f"array_distinct(flatten(transform({pos}, p -> sequence(p + 1, p + 5))))"
+    # split('') is [''], a phantom token: empty text has no words
+    # (functions.token_count)
+    w = w.selectExpr(
+        "doc_id", "tx",
+        "CAST(IF(tx = '', 0, size(ws)) AS BIGINT) AS n_words",
+        "CAST(IF(tx = '', 0, size(array_distinct(ws))) AS BIGINT) AS n_distinct",
+        "IF(tx = '', 0L, aggregate(wl, 0L, (a, x) -> a + x)) AS n_word_chars",
+        f"aggregate({covered}, 0L, (a, q) -> a + element_at(wl, q)) AS cov_chars",
+        *(f"{_top_count_sql(f'g{n}')} AS top{n}" for n in (2, 3, 4)),
+        *(f"size(g{n}) AS tot{n}" for n in (2, 3, 4)),
+        "CAST(size(lines) AS BIGINT) AS n_lines",
+        "size(array_distinct(lines)) AS n_distinct_lines",
+    )
+    n_words = F.col("n_words")
+    dup_frac = F.when(n_words > 0, 1.0 - F.col("n_distinct") / n_words).otherwise(F.lit(0.0))
+
+    def share(top: str, tot: str):
+        return F.when(F.col(tot) > 0, F.col(top) / F.col(tot)).otherwise(F.lit(0.0))
+
+    dup_line_frac = F.when(
+        F.col("n_lines") > 0,
+        (F.col("n_lines") - F.col("n_distinct_lines")) / F.col("n_lines"),
+    ).otherwise(F.lit(0.0))
+    dup5_char_frac = F.when(
+        F.col("n_word_chars") > 0, F.col("cov_chars") / F.col("n_word_chars")
+    ).otherwise(F.lit(0.0))
+    # mean word length: single-space normalization makes chars =
+    # length - (n_words - 1) an identity, so this is exact integer input
+    mwl = F.when(
+        n_words > 0, fixed_point((F.length("tx") - (n_words - F.lit(1))) / n_words)
+    ).otherwise(F.lit(0))
+    return w.select(
+        "doc_id",
+        "n_words",
+        fixed_point(dup_frac).alias("dup_word_frac_e4"),
+        F.coalesce("top2", F.lit(0)).alias("top_bigram_n"),
+        fixed_point(share("top2", "tot2")).alias("top_bigram_share_e4"),
+        fixed_point(share("top3", "tot3")).alias("top_3gram_share_e4"),
+        fixed_point(share("top4", "tot4")).alias("top_4gram_share_e4"),
+        "n_lines",
+        fixed_point(dup_line_frac).alias("dup_line_frac_e4"),
+        fixed_point(dup5_char_frac).alias("dup_5gram_char_frac_e4"),
+        mwl.alias("mwl_e4"),
+    )
+
+
 def repetition_stats(docs: DataFrame, text: str = "text") -> DataFrame:
     """Gopher repetition quality signals — the COMPLETE §A1.1 rule set
     (Rae et al. 2021, the published webtext-curation rules): duplicate-word
@@ -263,124 +368,15 @@ def repetition_stats(docs: DataFrame, text: str = "text") -> DataFrame:
     its characters once). High values flag boilerplate/spam for removal
     before training.
 
-    Shape: every rule is computed relationally — one combined explode of
-    (n, gram) structs for the n-gram counts, explode → count → join-back →
-    position-coverage for the duplicate-5-gram characters, explode → count
-    for lines; partial-agg shuffles keyed on (doc_id[, gram]), NEVER an
-    in-row O(words²) expression, so the operator is scale-safe at any
-    document length. Text twin of the reference's density/noise gates
+    Shape: every signal is a function of one document, so it is computed
+    inside the row, in native JVM expressions over the row's arrays:
+    distinct words and lines by ``array_distinct``, each top n-gram count
+    by one walk over the sorted n-grams, repeated 5-grams as equal
+    neighbours in the (gram, position)-sorted array. One scan, no explode,
+    no shuffle and no join; O(words log words) per row, so no document
+    length stalls a task. Text twin of the reference's density/noise gates
     (``python_files/strikethrough_agent.py:100-127``)."""
-    tx = norm_text(text)
-    ws = F.split(tx, " ")
-    raw = F.coalesce(F.col(text), F.lit(""))
-    lines = F.filter(F.split(raw, "\n"), lambda x: x != F.lit(""))
-    wlen_sum = F.aggregate(
-        F.transform(ws, lambda w: F.length(w).cast("long")),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    # empty-text guard (engine-wide phantom-token convention, see
-    # functions.token_count): split('') yields [''], so an empty doc would
-    # otherwise report n_words=1 and read as a one-word document downstream
-    base = docs.select(
-        F.col("doc_id"),
-        F.when(tx == "", F.lit(0)).otherwise(F.size(ws)).cast("long").alias("n_words"),
-        F.when(tx == "", F.lit(0)).otherwise(F.size(F.array_distinct(ws))).cast("long").alias("n_distinct"),
-        F.when(tx == "", F.lit(0)).otherwise(wlen_sum).alias("n_word_chars"),
-        ws.alias("ws"),
-        word_shingles(tx, 2).alias("g2"),
-        word_shingles(tx, 3).alias("g3"),
-        word_shingles(tx, 4).alias("g4"),
-        word_shingles(tx, 5).alias("g5"),
-        lines.alias("lines"),
-    )
-
-    def tagged(col: str, n: int):
-        return F.transform(
-            F.col(col), lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram"))
-        )
-
-    # top-n-gram shares (n = 2, 3, 4): ONE explode over the tagged union,
-    # count per (doc, n, gram), per-(doc, n) max/total, manual pivot
-    occ = base.select(
-        "doc_id", F.explode(F.concat(tagged("g2", 2), tagged("g3", 3), tagged("g4", 4))).alias("o")
-    ).select("doc_id", F.col("o.n").alias("n"), F.col("o.gram").alias("gram"))
-    gstat = (
-        occ.groupBy("doc_id", "n", "gram")
-        .agg(F.count("*").alias("c"))
-        .groupBy("doc_id", "n")
-        .agg(F.max("c").alias("top"), F.sum("c").alias("tot"))
-    )
-
-    def pick(n: int, col: str):
-        return F.max(F.when(F.col("n") == n, F.col(col)))
-
-    gwide = gstat.groupBy("doc_id").agg(
-        pick(2, "top").alias("top2"), pick(2, "tot").alias("tot2"),
-        pick(3, "top").alias("top3"), pick(3, "tot").alias("tot3"),
-        pick(4, "top").alias("top4"), pick(4, "tot").alias("tot4"),
-    )
-
-    # duplicate lines: occurrences after each line's first
-    lstat = (
-        base.select("doc_id", F.explode("lines").alias("ln"))
-        .groupBy("doc_id", "ln")
-        .agg(F.count("*").alias("c"))
-        .groupBy("doc_id")
-        .agg(F.sum("c").alias("n_lines"), F.count("*").alias("n_distinct_lines"))
-    )
-
-    # duplicate-5-gram character coverage: positions of 5-grams with count>1,
-    # expanded to covered word positions, deduped, weighted by word length
-    occ5 = base.select("doc_id", F.posexplode("g5").alias("pos", "gram"))
-    dup5 = (
-        occ5.groupBy("doc_id", "gram").agg(F.count("*").alias("c")).filter(F.col("c") > 1)
-    )
-    cov = (
-        occ5.join(dup5, ["doc_id", "gram"])
-        .select("doc_id", F.explode(F.sequence(F.col("pos") + 1, F.col("pos") + 5)).alias("wp"))
-        .distinct()
-    )
-    wp = base.filter(F.col("n_words") > 0).select(
-        "doc_id", F.posexplode("ws").alias("wp0", "w")
-    ).select("doc_id", (F.col("wp0") + 1).alias("wp"), F.length("w").cast("long").alias("wl"))
-    covchars = cov.join(wp, ["doc_id", "wp"]).groupBy("doc_id").agg(
-        F.sum("wl").alias("cov_chars")
-    )
-
-    out = (
-        base.select("doc_id", "n_words", "n_distinct", "n_word_chars")
-        .join(gwide, "doc_id", "left")
-        .join(lstat, "doc_id", "left")
-        .join(covchars, "doc_id", "left")
-    )
-    dup_frac = F.when(
-        F.col("n_words") > 0, 1.0 - F.col("n_distinct") / F.col("n_words")
-    ).otherwise(F.lit(0.0))
-
-    def share(top: str, tot: str):
-        return F.when(F.col(tot) > 0, F.col(top) / F.col(tot)).otherwise(F.lit(0.0))
-
-    dup_line_frac = F.when(
-        F.col("n_lines") > 0,
-        (F.col("n_lines") - F.col("n_distinct_lines")) / F.col("n_lines"),
-    ).otherwise(F.lit(0.0))
-    dup5_char_frac = F.when(
-        F.col("n_word_chars") > 0,
-        F.coalesce(F.col("cov_chars"), F.lit(0)) / F.col("n_word_chars"),
-    ).otherwise(F.lit(0.0))
-    return out.select(
-        "doc_id",
-        "n_words",
-        fixed_point(dup_frac).alias("dup_word_frac_e4"),
-        F.coalesce(F.col("top2"), F.lit(0)).alias("top_bigram_n"),
-        fixed_point(share("top2", "tot2")).alias("top_bigram_share_e4"),
-        fixed_point(share("top3", "tot3")).alias("top_3gram_share_e4"),
-        fixed_point(share("top4", "tot4")).alias("top_4gram_share_e4"),
-        F.coalesce(F.col("n_lines"), F.lit(0)).alias("n_lines"),
-        fixed_point(dup_line_frac).alias("dup_line_frac_e4"),
-        fixed_point(dup5_char_frac).alias("dup_5gram_char_frac_e4"),
-    )
+    return _repetition(docs, text).drop("mwl_e4")
 
 
 # Gopher-rule thresholds (Rae et al. 2021 §A1.1 structure; values adapted to
@@ -429,24 +425,11 @@ def gopher_filter(docs: DataFrame, text: str = "text") -> DataFrame:
     (chars = length - (n_words-1), single-space normalization makes that an
     identity); every other signal is the e4 fixed-point output of
     ``repetition_stats``, so each threshold comparison is BIGINT vs BIGINT —
-    byte-identical decisions on Spark and the SQL twin. One extra narrow
-    join against the stats; the text column is scanned once."""
-    stats = repetition_stats(docs, text)
-    tx = norm_text(text)
-    toks = token_count(tx)
-    mwl = docs.select(
-        F.col("doc_id"),
-        F.when(
-            toks > 0, fixed_point((F.length(tx) - (toks - F.lit(1))) / toks)
-        ).otherwise(F.lit(0)).alias("mwl_e4"),
-    )
-    s = stats.join(mwl, "doc_id")
-    cols = {name: F.col(name) for name in (
-        "n_words", "dup_word_frac_e4", "dup_line_frac_e4",
-        "top_bigram_share_e4", "dup_5gram_char_frac_e4", "mwl_e4",
-    )}
+    byte-identical decisions on Spark and the SQL twin. The rules read the
+    same one-scan projection as ``repetition_stats``: no join, no shuffle."""
+    s = _repetition(docs, text)
     reason_cols = [
-        F.when(pred(cols, GOPHER_DEFAULTS), F.lit(name)) for name, pred in _GOPHER_RULES
+        F.when(pred(s, GOPHER_DEFAULTS), F.lit(name)) for name, pred in _GOPHER_RULES
     ]
     reasons = F.concat_ws(",", *reason_cols)  # concat_ws skips NULLs
     return s.select(

@@ -82,11 +82,12 @@ def run_curation(
     Dataflow: only the DECISION frame is computed from the live plan; the
     curated table and the stats both derive from the decisions parquet read
     back after the write, so the three outputs can never disagree."""
-    # materialize after EACH rewrite: the decision plan and the curated
-    # write both reference ``docs`` from many branches, and span_dedup
-    # references its input three times — without barriers the rewrite
-    # chain re-executes per reference (the line and gram explode stages
-    # each ran 3× per curation)
+    # materialize each plan that more than one action reads: after EACH
+    # rewrite (the decision plan and the curated write both reference
+    # ``docs``, and span_dedup references its input three times, so the
+    # rewrite chain re-executed per reference: the line and gram explode
+    # stages each ran 3× per curation), and the decision frame before the
+    # near rung, whose signatures, shingles and final write each read it
     if dedup_lines:
         ld = line_dedup(docs).select(
             "doc_id", "n_lines", F.col("n_kept").alias("n_lines_kept"), "text_dedup"
@@ -134,6 +135,7 @@ def run_curation(
         "survivor", F.col("keep") & (F.col("doc_id") == F.col("keeper_doc_id"))
     )
     if dedup_near:
+        d = d.localCheckpoint(eager=True)
         # exact dedup stays in front: identical docs are sure LSH candidates
         # only with ≥k words, so tiny exact dupes need the fp stage
         kept = docs.join(d.filter(F.col("survivor")).select("doc_id"), "doc_id")

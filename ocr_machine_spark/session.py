@@ -56,15 +56,26 @@ def get_spark(
         # a single shared sandbox disk would fake poor scaling
         .config("spark.local.dir", _local_dir())
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or int(cpus)))
-        # local-mode heap: 32 concurrent tasks share ONE JVM, so the "driver"
-        # heap is really the whole cluster's executor memory — 8g gave each
-        # task ~125MB of execution memory and the wide-shuffle stages
-        # (jaccard pair counting) spilled ~0.5GB per stage (r7 measurement).
-        # 24g ≈ 20% of the sandbox's 128GiB; on a real cluster executors set
-        # spark.executor.memory instead and this knob stays driver-sized.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
     )
-    b = b.master(master or f"local[{cpus}]")
+    master = master or f"local[{cpus}]"
+    b = b.master(master)
+    memory = driver_memory(master)
+    if memory:
+        b = b.config("spark.driver.memory", memory)
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def driver_memory(master: str) -> str | None:
+    """``spark.driver.memory`` for ``master``: ``SPARK_DRIVER_MEMORY`` on
+    any master, else 24g on a local one, else None (the deployment's own
+    setting stands).
+
+    In local mode all tasks share ONE JVM, so the "driver" heap is really
+    the whole cluster's executor memory — 8g gave each of 32 tasks ~125MB of
+    execution memory and the wide-shuffle stages (jaccard pair counting)
+    spilled ~0.5GB per stage (r7 measurement). On a cluster the executors
+    bring their own memory, so the driver keeps the deployment's size."""
+    local = master == "local" or master.startswith("local[")
+    return os.environ.get("SPARK_DRIVER_MEMORY") or ("24g" if local else None)

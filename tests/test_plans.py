@@ -95,6 +95,22 @@ def test_simhash_is_jvm_side(spark):
     assert plan.count("HashAggregate") >= 2  # map-side partial bit-votes
 
 
+def test_gopher_signals_have_no_exchange(spark):
+    """Every Gopher signal is a function of one document, so the stats and
+    the decision are narrow projections over the scan: no shuffle and no
+    broadcast (AQE off, so the static plan is the one checked)."""
+    from ocr_machine_spark.operators.textstats import gopher_filter, repetition_stats
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for df in (gopher_filter(docs), repetition_stats(docs)):
+            assert "Exchange" not in _physical(df)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
 def test_embedding_dup_pairs_never_cross_joins(spark):
     """The embedding dedup tier must meet candidates in a bucket equi-join —
     no CartesianProduct / BroadcastNestedLoopJoin anywhere in the plan."""
