@@ -690,10 +690,10 @@ def _dedup_keep_list(spark, sf_dir):
     """Pair graph → connected components → survivor per cluster (min id).
     The retention stage of the dedup ladder; DuckDB twin resolves the same
     components with a recursive-CTE transitive closure. Runs the
-    large-star/small-star variant — the O(log n)-rounds shape that survives
+    large-star/small-star loop — the O(log² n)-rounds shape that survives
     adversarial chain components at 10^12 docs — so the driver gates the
-    scale path; min-label propagation equivalence is pinned in
-    tests/test_dedup_ops.py."""
+    scale path; tests/test_dedup_ops.py pins it against a union-find on
+    chains, a zigzag and random graphs."""
     docs = _tp(spark, sf_dir, "documents")
     # max_docs=None: harness-controlled fixture corpus (see
     # _jaccard_pairs_3gram) — a guard raise must never abort the gate run

@@ -7,9 +7,12 @@ each tier prunes the next tier's input:
 2. ngram-jaccard — exact set similarity on word shingles (quadratic in the
                    candidate set; used to *verify* candidates, or standalone
                    at small scale). DuckDB-oracle-checked.
-3. minhash-LSH  — banded MinHash over shingles; candidate pairs only ever
-                   meet inside a band-bucket shuffle, never a cross join.
-                   Verified by tier 2 on the candidates.
+3. minhash-LSH  — banded MinHash over each document's shingle-hash array,
+                   built once per row in one projection (no explode, no
+                   shuffle); candidate pairs only ever meet inside a
+                   band-bucket shuffle, never a cross join. Verified by
+                   tier 2's exact Jaccard, counted in the row as the
+                   intersection of the pair's two hash arrays.
 4. simhash      — 64-bit near-dup signature, pure JVM expressions (explode
                    distinct words → codegen'd bit-vote sums; map-side partial
                    agg keeps the shuffle at one row per doc).
@@ -33,15 +36,6 @@ def dedup_exact(docs: DataFrame, key: str = "doc_id", text: str = "text") -> Dat
         docs.select(F.col(key), F.md5(norm_text(text)).alias("fp"))
         .groupBy("fp")
         .agg(F.min(key).alias("keep_id"), F.count("*").alias("n_copies"))
-    )
-
-
-def shingle_rows(docs: DataFrame, k: int = 3, key: str = "doc_id", text: str = "text") -> DataFrame:
-    """Distinct (key, shingle) rows — the exploded form both Jaccard and
-    MinHash build on."""
-    return (
-        docs.select(F.col(key), F.explode(word_shingles(F.col(text), k)).alias("s"))
-        .distinct()
     )
 
 
@@ -88,7 +82,8 @@ def jaccard_pairs(
     # set sizes are exact; a cross-doc xxhash64 collision (~|shingles|²/2⁶⁵)
     # is the same accepted class as every other xxhash64 key in the engine.
     sh = (
-        shingle_rows(docs, k, key, text)
+        docs.select(F.col(key), F.explode(word_shingles(F.col(text), k)).alias("s"))
+        .distinct()
         .select(F.col(key), F.xxhash64("s").alias("s"))
         .cache()
     )
@@ -130,23 +125,46 @@ def jaccard_pairs(
     )
 
 
+def _minhash_frame(docs: DataFrame, k: int, n_hashes: int, key: str, text: str) -> DataFrame:
+    """``(key, hs, sig)``, one row per document with at least one shingle.
+
+    ``hs`` is the document's distinct shingles, each hashed once with
+    xxhash64; the distinct is taken on the strings, so set sizes are exact.
+    ``sig[i]`` is the min over ``hs`` of ``xxhash64(h, i)``: permutation i
+    re-hashes the 8-byte shingle hash with its index instead of re-scanning
+    the shingle text. (ANSI mode note: a classic a*h+b universal mix
+    overflows — Spark 4 throws on long overflow — so the mix is itself
+    xxhash64.)
+
+    ``hs`` reaches the signature lambda as a column: Catalyst collapses a
+    projection into a consumer that reads the column only once, and inside
+    the lambda the whole shingle build would then run once per permutation.
+    The ``size(hs) > 0`` guard is the second read that keeps it materialised
+    (the rule ``textstats._repetition`` documents)."""
+    hs = F.transform(F.array_distinct(word_shingles(F.col(text), k)), lambda s: F.xxhash64(s))
+    sig = F.transform(
+        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
+        lambda i: F.array_min(F.transform(F.col("hs"), lambda h: F.xxhash64(h, i))),
+    )
+    # fewer than k words → no shingle → no row: an all-NULL signature would
+    # put every such document in one LSH bucket. Filtered on the word count
+    # in front of the projection; a filter on size(hs) would be pushed below
+    # it and rebuild the shingles.
+    return (
+        docs.filter(F.size(F.split(F.col(text), " ")) >= k)
+        .select(F.col(key), hs.alias("hs"))
+        .select(key, "hs", F.when(F.size("hs") > 0, sig).alias("sig"))
+    )
+
+
 def minhash_signatures(
     docs: DataFrame, *, k: int = 3, n_hashes: int = 32, key: str = "doc_id", text: str = "text"
 ) -> DataFrame:
-    """MinHash signature per document: the shingle is string-hashed ONCE,
-    then permutation i re-hashes the resulting 8-byte long with the
-    permutation index — h_i(s) = xxhash64(xxhash64(s), i) — instead of the
-    round-1 shape's 32 independent STRING hashes per shingle row (fixed-width
-    long hashing is ~10x cheaper than re-scanning the shingle text).
-    signature[i] = min over shingles; pure expressions, one map-side-combined
-    groupBy. (ANSI mode note: a classic a*h+b universal mix overflows —
-    Spark 4 throws on long overflow — so the mix is itself xxhash64.)"""
-    sh = shingle_rows(docs, k, key, text).select(key, F.xxhash64("s").alias("h"))
-    mins = [
-        F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"h{i}") for i in range(n_hashes)
-    ]
-    sig = sh.groupBy(key).agg(*mins)
-    return sig.select(F.col(key), F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig"))
+    """MinHash signature per document, ``(key, sig)`` with ``sig`` an
+    ``n_hashes``-long array of longs: one narrow projection per row over the
+    document's shingle-hash array (see :func:`_minhash_frame`), no explode
+    and no shuffle. Documents with fewer than ``k`` words get no row."""
+    return _minhash_frame(docs, k, n_hashes, key, text).select(key, "sig")
 
 
 def lsh_candidate_pairs(
@@ -197,176 +215,105 @@ def minhash_dedup_pairs(
     key: str = "doc_id",
     text: str = "text",
 ) -> DataFrame:
-    """LSH candidates → exact-Jaccard verification (candidate-only join)."""
-    rows_per_band = n_hashes // bands
-    # materialize signatures once: the band-bucket self-join otherwise
-    # recomputes the whole shingle->minhash pipeline for BOTH sides. O(docs)
-    # rows of (key, 32 longs) — at 10^12 docs persist to a table instead.
-    sig = minhash_signatures(docs, k=k, n_hashes=n_hashes, key=key, text=text).localCheckpoint(
-        eager=True
+    """LSH candidates → exact-Jaccard verification on the candidates only.
+
+    Each document's shingle-hash array and signature are built once, in one
+    projection, and materialised: O(docs) rows of (key, hs, 32 longs) — at
+    10^12 docs persist to a table instead. The band-bucket self-join reads
+    ``sig``; each candidate pair then joins its two ``hs`` arrays and counts
+    the intersection in the row, J = |∩| / (|A|+|B|−|∩|), exact up to 64-bit
+    shingle-hash collisions (the ``jaccard_pairs`` contract)."""
+    frame = _minhash_frame(docs, k, n_hashes, key, text).localCheckpoint(eager=True)
+    cand = lsh_candidate_pairs(
+        frame.select(key, "sig"), bands=bands, rows_per_band=n_hashes // bands, key=key
     )
-    cand = lsh_candidate_pairs(sig, bands=bands, rows_per_band=rows_per_band, key=key)
-    # hashed shingle keys for the verify joins (see jaccard_pairs: same
-    # post-distinct 64-bit reduction the signature stage already applies)
-    sh = (
-        shingle_rows(docs, k, key, text)
-        .select(F.col(key), F.xxhash64("s").alias("s"))
-        .cache()
-    )
-    sizes = sh.groupBy(key).agg(F.count("*").alias("n"))
-    # candidate-restricted intersection: attach a's shingles, then equi-join
-    # on (b, shingle) — no per-pair cross product
-    inter = (
-        cand.join(sh.select(F.col(key).alias("a"), "s"), "a")
-        .join(sh.select(F.col(key).alias("b"), "s"), ["b", "s"])
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
-    )
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+    inter = F.size(F.array_intersect("ha", "hb"))
+    jac = inter / (F.size("ha") + F.size("hb") - inter)
     return (
-        inter.join(sizes.select(F.col(key).alias("a"), F.col("n").alias("n_a")), "a")
-        .join(sizes.select(F.col(key).alias("b"), F.col("n").alias("n_b")), "b")
+        cand.join(frame.select(F.col(key).alias("a"), F.col("hs").alias("ha")), "a")
+        .join(frame.select(F.col(key).alias("b"), F.col("hs").alias("hb")), "b")
         .withColumn("jaccard_e4", fixed_point(jac))
         .filter(jac >= F.lit(threshold))
         .select("a", "b", "jaccard_e4")
     )
 
 
-def dedup_clusters(docs: DataFrame, pairs: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Resolve near-dup PAIRS into clusters and a keep-list: every doc maps
-    to its connected component's minimum id (``rep``); ``keep = (doc == rep)``.
-
-    This is the survivor-selection stage every production dedup needs after
-    pair generation (exact/MinHash/SimHash emit pairs; retention wants one
-    doc per cluster). Algorithm: min-label propagation to fixpoint — each
-    round, a doc's label becomes the min of its own and its neighbors'
-    labels; near-dup components are tiny (dozens), so rounds ≈ component
-    diameter and each round is one shuffle on the edge key. At web scale with
-    adversarially long chains, use :func:`dedup_clusters_star` (alternating
-    large-star/small-star — O(log n) rounds on any graph, same output
-    contract; equivalence is pinned by tests/test_dedup_ops.py).
-
-    Deterministic: fixpoint of a monotone min — independent of partitioning
-    and iteration interleave.
-    """
-    ids = docs.select(F.col(key).alias("node")).distinct()
-    edges = (
-        pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        .union(pairs.select(F.col("b").alias("x"), F.col("a").alias("y")))
+def _large_star(e: DataFrame) -> DataFrame:
+    """Each node's larger neighbours point to the node's smallest
+    neighbourhood id (itself included)."""
+    nbrs = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    m = nbrs.groupBy("u").agg(F.min("v").alias("mn"))
+    m = m.select("u", F.least("u", "mn").alias("m"))
+    return (
+        nbrs.join(m, "u")
+        .filter(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    # localCheckpoint (not cache): each round's plan must START from the
-    # previous round's materialized labels — cache keeps the logical plan,
-    # which doubles per round and OOMs the driver on diameter>10 chains
-    labels = ids.withColumn("rep", F.col("node")).localCheckpoint(eager=True)
-    while True:
-        neighbor_min = (
-            edges.join(labels, edges.y == labels.node)
-            .groupBy("x")
-            .agg(F.min("rep").alias("nrep"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.x, "left")
-            .select(
-                "node",
-                F.least(F.col("rep"), F.coalesce(F.col("nrep"), F.col("rep"))).alias("rep"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.rep") != F.col("o.rep"))
-            .count()
-        )
-        # release the PREVIOUS round's checkpointed labels now that the new
-        # round is materialized — without this, checkpoint storage accumulates
-        # for the life of the job on high-diameter graphs
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels.select(
-        F.col("node").alias(key), "rep", (F.col("node") == F.col("rep")).alias("keep")
+
+
+def _small_star(e: DataFrame) -> DataFrame:
+    """Each node and its smaller neighbours point to the smallest of them."""
+    o = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+    m = o.groupBy("u").agg(F.min("v").alias("mn"))
+    m = m.select("u", F.least("u", "mn").alias("m"))
+    return (
+        o.join(m, "u")
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .union(m.select("u", F.col("m").alias("v")))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
     )
+
+
+def _is_star_forest(e: DataFrame) -> bool:
+    """Exact test, no hash: every node has at most one out-edge, and no node
+    has both an out-edge and an in-edge."""
+    deg = e.select(F.col("u").alias("n"), F.lit(1).alias("o"), F.lit(0).alias("i")).union(
+        e.select(F.col("v").alias("n"), F.lit(0).alias("o"), F.lit(1).alias("i"))
+    )
+    bad = (
+        deg.groupBy("n")
+        .agg(F.sum("o").alias("o"), F.sum("i").alias("i"))
+        .filter((F.col("o") > 1) | ((F.col("o") > 0) & (F.col("i") > 0)))
+    )
+    return bad.isEmpty()
 
 
 def dedup_clusters_star(docs: DataFrame, pairs: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — same
-    output contract as :func:`dedup_clusters` (node → component-min ``rep``,
-    ``keep = (node == rep)``), different convergence shape: O(log n) rounds
-    on ANY graph, where plain min-label propagation needs component-diameter
-    rounds (an adversarial 10^6-long near-dup chain = 10^6 shuffles there,
-    ~20 here).
+    """Resolve near-dup PAIRS into clusters and a keep-list: every doc maps
+    to its connected component's minimum id (``rep``), ``keep = (doc ==
+    rep)``; a doc in no pair is its own component.
 
-    Per round both steps are one groupBy + one join on the edge key; edges
-    only ever point toward smaller ids, so the edge set monotonically
-    approaches the star graph centered at each component's minimum.
-    Deterministic: pure min arithmetic, no partitioning sensitivity. Lineage
-    is truncated every round (localCheckpoint) so plans stay flat.
+    Connected components via alternating large-star / small-star rounds
+    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
+    O(log² n) rounds on any graph, where min-label propagation needs
+    component-diameter rounds (an adversarial 10^6-long near-dup chain =
+    10^6 shuffles there, ~20 here). Per round both steps are one groupBy +
+    one join on the edge key, and lineage is truncated every round
+    (localCheckpoint) so plans stay flat.
+
+    Termination: every edge points from a larger id to a smaller one (the
+    input is oriented that way, and both steps keep it). Once each node has
+    at most one out-edge and none has both an out- and an in-edge, the edge
+    set is a star forest whose centres are the component minima: a fixpoint
+    of both steps, with edges ``(node, component_min)``. The loop tests for
+    that state exactly before each round, so an input that is already a
+    star forest (disjoint near-dup pairs) runs no round. Deterministic: pure
+    min arithmetic, no partitioning sensitivity.
     """
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        nbrs = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = nbrs.groupBy("u").agg(F.min("v").alias("mn"))
-        m = m.select("u", F.least("u", "mn").alias("m"))
-        return (
-            nbrs.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        o = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        m = o.groupBy("u").agg(F.min("v").alias("mn"))
-        m = m.select("u", F.least("u", "mn").alias("m"))
-        return (
-            o.join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(m.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
     edges = (
-        pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
+        pairs.select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # fixpoint test: the edge set is deterministic per round, so an
-    # order-insensitive fingerprint (count + xor of row hashes — xor, not
-    # sum, so ANSI overflow can't fire) detects stability in one tiny agg
-    def _sig(e: DataFrame):
-        return e.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-
-    prev_sig = _sig(edges)
-    while True:
+    while not _is_star_forest(edges):
         nxt = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        nxt_sig = _sig(nxt)
-        # the fingerprint is a cheap per-round screen; termination itself is
-        # confirmed EXACTLY (symmetric difference empty) so a 64-bit hash
-        # collision can never end the loop early with wrong components — the
-        # exact check only runs on rounds the fingerprint already passed
-        stable = nxt_sig == prev_sig and (
-            nxt.exceptAll(edges).union(edges.exceptAll(nxt)).isEmpty()
-        )
         # release the previous round's checkpoint once the new one is live
         edges.unpersist()
         edges = nxt
-        prev_sig = nxt_sig
-        if stable:
-            break
-    # converged: every edge is (node, component_min); isolated docs are their
-    # own component
     labels = edges.select(F.col("u").alias("node"), F.col("v").alias("rep"))
     ids = docs.select(F.col(key).alias("node")).distinct()
     return (

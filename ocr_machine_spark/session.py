@@ -24,9 +24,12 @@ def get_spark(
 ) -> SparkSession:
     """Build a session with AQE + Arrow on.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; on a
-    real cluster leave it unset and let spark-submit provide it. All knobs are
-    plain configs so the same code ships via ``spark-submit --py-files``.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` only when the
+    program was started with plain ``python``. Under a launcher
+    (``spark-submit``, the ``pyspark`` shell) the JVM is already running and
+    ``PYSPARK_GATEWAY_PORT`` is set, so an unset ``master`` leaves the
+    launcher's ``--master`` in force. All knobs are plain configs so the same
+    code ships via ``spark-submit --py-files``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     b = (
@@ -57,8 +60,10 @@ def get_spark(
         .config("spark.local.dir", _local_dir())
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or int(cpus)))
     )
-    master = master or f"local[{cpus}]"
-    b = b.master(master)
+    if not master and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = f"local[{cpus}]"
+    if master:
+        b = b.master(master)
     memory = driver_memory(master)
     if memory:
         b = b.config("spark.driver.memory", memory)
@@ -67,15 +72,15 @@ def get_spark(
     return b.getOrCreate()
 
 
-def driver_memory(master: str) -> str | None:
+def driver_memory(master: str | None) -> str | None:
     """``spark.driver.memory`` for ``master``: ``SPARK_DRIVER_MEMORY`` on
     any master, else 24g on a local one, else None (the deployment's own
-    setting stands).
+    setting stands; ``None`` is a master the launcher chose).
 
     In local mode all tasks share ONE JVM, so the "driver" heap is really
     the whole cluster's executor memory — 8g gave each of 32 tasks ~125MB of
     execution memory and the wide-shuffle stages (jaccard pair counting)
     spilled ~0.5GB per stage (r7 measurement). On a cluster the executors
     bring their own memory, so the driver keeps the deployment's size."""
-    local = master == "local" or master.startswith("local[")
+    local = master is not None and (master == "local" or master.startswith("local["))
     return os.environ.get("SPARK_DRIVER_MEMORY") or ("24g" if local else None)

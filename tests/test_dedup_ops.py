@@ -1,16 +1,41 @@
-"""Unit tests for dedup cluster resolution (pairs → components → keep-list)."""
+"""Unit tests for the dedup operators: near-dup pairs → components →
+keep-list, MinHash signatures, SimHash and the ANN similarity tiers."""
 
-import pyspark.sql.functions as F
+import random
 
-from ocr_machine_spark.operators.dedup import dedup_clusters
+import pytest
+
+from ocr_machine_spark.operators import dedup as D
+from ocr_machine_spark.operators.dedup import dedup_clusters_star
+
+
+def _components(nodes, pairs):
+    """Reference: union-find where the smaller root always wins, so each
+    root is its component's minimum. node → (rep, keep)."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: (find(n), find(n) == n) for n in nodes}
+
+
+def _star(spark, nodes, pairs, keytype="long"):
+    docs = spark.createDataFrame([(n,) for n in nodes], f"doc_id {keytype}")
+    pdf = spark.createDataFrame(pairs, f"a {keytype}, b {keytype}")
+    return {r["doc_id"]: (r["rep"], r["keep"]) for r in dedup_clusters_star(docs, pdf).collect()}
 
 
 def test_dedup_clusters_chain_and_isolated(spark):
-    docs = spark.createDataFrame([(i,) for i in range(1, 7)], "doc_id long")
     # chain 1-2-3 (transitive: 3 never pairs with 1 directly), pair 4-5, isolated 6
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "a long, b long")
-    out = {r["doc_id"]: (r["rep"], r["keep"]) for r in dedup_clusters(docs, pairs).collect()}
-    assert out == {
+    assert _star(spark, range(1, 7), [(1, 2), (2, 3), (4, 5)]) == {
         1: (1, True),
         2: (1, False),
         3: (1, False),
@@ -20,41 +45,73 @@ def test_dedup_clusters_chain_and_isolated(spark):
     }
 
 
-def test_dedup_clusters_partitioning_invariant(spark):
-    docs = spark.createDataFrame([(i,) for i in range(20)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 18, 2)] + [(1, 3), (17, 19)], "a long, b long"
-    )
-    a = dedup_clusters(docs, pairs).orderBy("doc_id").collect()
-    b = dedup_clusters(docs.repartition(7), pairs.repartition(3)).orderBy("doc_id").collect()
-    assert a == b
-
-
 def test_dedup_clusters_star_equivalence(spark):
-    """large-star/small-star components == min-label propagation on
-    adversarial shapes: a long chain (worst case for propagation), a clique,
-    a reversed chain, two bridged stars, and isolated nodes."""
-    from ocr_machine_spark.operators.dedup import dedup_clusters_star
-
-    n = 40
-    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    """large-star/small-star components == union-find on adversarial
+    shapes: a chain, a clique, a reversed chain, two bridged stars, and
+    isolated nodes."""
+    nodes = range(40)
     chain = [(i, i + 1) for i in range(0, 12)]                 # 0..12 chain
     rev_chain = [(i + 1, i) for i in range(13, 19)]            # edges given b<a
     clique = [(a, b) for a in range(20, 25) for b in range(a + 1, 25)]
     bridged = [(30, 31), (30, 32), (33, 34), (33, 35), (32, 33)]
-    pairs = spark.createDataFrame(chain + rev_chain + clique + bridged, "a long, b long")
-    ref = {r["doc_id"]: (r["rep"], r["keep"]) for r in dedup_clusters(docs, pairs).collect()}
-    star = {r["doc_id"]: (r["rep"], r["keep"]) for r in dedup_clusters_star(docs, pairs).collect()}
-    assert star == ref
+    pairs = chain + rev_chain + clique + bridged
+    star = _star(spark, nodes, pairs)
+    assert star == _components(nodes, pairs)
     # spot-check the contract directly
     assert star[12] == (0, False) and star[0] == (0, True)
     assert star[35] == (30, False)
     assert star[39] == (39, True)
 
 
-def test_dedup_clusters_star_partitioning_invariant(spark):
-    from ocr_machine_spark.operators.dedup import dedup_clusters_star
+def _zigzag(n):
+    order = [x for i in range(n // 2) for x in (i, n - 1 - i)]
+    return list(zip(order, order[1:]))
 
+
+def _random_graph(seed, n=60):
+    rng = random.Random(seed)
+    # self-loops and repeated pairs included: both must be harmless
+    return [(rng.randrange(n), rng.randrange(n)) for _ in range(rng.randrange(n // 2, 2 * n))]
+
+
+GRAPHS = {
+    "chain64": (64, [(i, i + 1) for i in range(63)]),
+    "reversed_chain64": (64, [(i + 1, i) for i in range(63)]),
+    "zigzag64": (64, _zigzag(64)),
+    **{f"random{seed}": (60, _random_graph(seed)) for seed in range(4)},
+}
+
+
+@pytest.mark.parametrize("keytype", ["long", "string"])
+@pytest.mark.parametrize("graph", sorted(GRAPHS))
+def test_dedup_clusters_star_rounds_match_union_find(spark, graph, keytype):
+    """The round path against union-find: chains, a zigzag and seeded
+    random graphs that need several rounds, with long and string keys
+    (string order differs from numeric order, so the minima move)."""
+    n, pairs = GRAPHS[graph]
+    key = int if keytype == "long" else (lambda i: f"h{i}")
+    nodes = [key(i) for i in range(n)]
+    pairs = [(key(a), key(b)) for a, b in pairs]
+    assert _star(spark, nodes, pairs, keytype) == _components(nodes, pairs)
+
+
+def test_dedup_clusters_star_round_counts(spark, monkeypatch):
+    """The 64-node chain needs ≥ 3 rounds, so the cases above exercise the
+    loop itself; an input that is already a star forest at its minima (the
+    disjoint pairs of a near-dup rung) runs none."""
+    rounds = []
+    small_star = D._small_star
+    monkeypatch.setattr(D, "_small_star", lambda e: rounds.append(1) or small_star(e))
+    n, pairs = GRAPHS["chain64"]
+    assert _star(spark, range(n), pairs) == _components(range(n), pairs)
+    assert len(rounds) >= 3, len(rounds)
+    rounds.clear()
+    pairs = [(0, 1), (2, 0), (0, 3), (10, 11), (21, 20), (20, 22)]
+    assert _star(spark, range(25), pairs) == _components(range(25), pairs)
+    assert rounds == []
+
+
+def test_dedup_clusters_star_partitioning_invariant(spark):
     docs = spark.createDataFrame([(i,) for i in range(20)], "doc_id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 18, 2)] + [(1, 3), (17, 19)], "a long, b long"
@@ -62,6 +119,35 @@ def test_dedup_clusters_star_partitioning_invariant(spark):
     a = dedup_clusters_star(docs, pairs).orderBy("doc_id").collect()
     b = dedup_clusters_star(docs.repartition(7), pairs.repartition(3)).orderBy("doc_id").collect()
     assert a == b
+
+
+def test_dedup_clusters_partitioning_invariant(spark):
+    """Repartitioning must not change the components when the graph needs
+    several rounds: a zigzag and a seeded random graph, spread over odd
+    partition counts, with long and string keys, against union-find."""
+    edges = _zigzag(32) + [(a + 32, b + 32) for a, b in _random_graph(1, 32)]
+    for keytype, key in (("long", int), ("string", lambda i: f"h{i}")):
+        nodes = [key(i) for i in range(64)]
+        pairs = [(key(a), key(b)) for a, b in edges]
+        docs = spark.createDataFrame([(v,) for v in nodes], f"doc_id {keytype}")
+        pdf = spark.createDataFrame(pairs, f"a {keytype}, b {keytype}")
+        a = dedup_clusters_star(docs, pdf).orderBy("doc_id").collect()
+        b = dedup_clusters_star(docs.repartition(7), pdf.repartition(3)).orderBy("doc_id").collect()
+        assert a == b, keytype
+        assert {r["doc_id"]: (r["rep"], r["keep"]) for r in b} == _components(nodes, pairs), keytype
+
+
+def test_minhash_skips_docs_without_a_shingle(spark):
+    """A document with fewer than k words has no shingle, so no signature
+    row: an all-NULL signature would put every such document in one LSH
+    bucket and pair them all."""
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "two words"), (4, "one two three"), (5, "one two three"),
+         (6, "x y"), (7, "x y")],
+        "doc_id long, text string",
+    )
+    assert [r["doc_id"] for r in D.minhash_signatures(docs).orderBy("doc_id").collect()] == [4, 5]
+    assert [tuple(r) for r in D.minhash_dedup_pairs(docs, threshold=0.8).collect()] == [(4, 5, 10000)]
 
 
 def test_simhash_empty_doc_signature_is_zero(spark):

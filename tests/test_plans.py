@@ -111,6 +111,27 @@ def test_gopher_signals_have_no_exchange(spark):
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
+def test_minhash_signatures_have_no_exchange(spark):
+    """A MinHash signature is a function of one document: one narrow
+    projection over the scan, no shuffle (AQE off, so the static plan is the
+    one checked). The signature lambda reads the materialised shingle-hash
+    column ``hs``: inlined, the whole shingle build (split, zip_with) would
+    run once per permutation."""
+    from ocr_machine_spark.operators.dedup import minhash_signatures
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert "Exchange" not in _physical(minhash_signatures(docs))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    plan = _optimized(minhash_signatures(docs))
+    sig_line = next(line for line in plan.splitlines() if "array_min" in line)
+    assert "hs#" in sig_line
+    assert "zip_with" not in sig_line and "split(" not in sig_line
+
+
 def test_embedding_dup_pairs_never_cross_joins(spark):
     """The embedding dedup tier must meet candidates in a bucket equi-join —
     no CartesianProduct / BroadcastNestedLoopJoin anywhere in the plan."""
