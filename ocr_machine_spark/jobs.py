@@ -45,7 +45,35 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main(argv: list[str] | None = None) -> None:
+# the flags each job reads beyond --input/--output/--run-id/--master/--job;
+# any other flag set away from its default is named as ignored
+_READS = {
+    "extract": {"buckets", "partitions", "output_table", "diff_against", "input_format"},
+    "curate": {"dedup_lines", "dedup_spans", "dedup_near", "decontaminate", "input_format"},
+    "linkgraph": {"partitions", "input_format"},
+    "cdx": set(),
+    "frontier": {"partitions", "diff_against", "robots", "sitemaps", "input_format"},
+    "train": {"epochs", "lr", "input_format"},
+}
+_ALWAYS = {"input", "output", "run_id", "master", "job"}
+
+
+def ignored_flags(ap: argparse.ArgumentParser, args: argparse.Namespace) -> list[str]:
+    """The flags, in parser order, that ``args.job`` does not read but that
+    are set away from their default. cdx always reads WARC, so
+    ``--input-format warc`` is consistent with it, not ignored; any other
+    explicit format is named rather than silently dropped."""
+    reads = _ALWAYS | _READS[args.job]
+    return [
+        "--" + dest.replace("_", "-")
+        for dest, val in vars(args).items()
+        if dest not in reads
+        and val != ap.get_default(dest)
+        and not (args.job == "cdx" and dest == "input_format" and val == "warc")
+    ]
+
+
+def parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "--input",
@@ -166,99 +194,24 @@ def main(argv: list[str] | None = None) -> None:
         "excised (case-insensitive match, case-preserving rewrite); the "
         "curated/decision tables gain n_span_words/n_span_kept",
     )
+    return ap
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = parser()
     args = ap.parse_args(argv)
-
-    from ocr_machine_spark.plans.lineage import run_extraction
-    from ocr_machine_spark.session import get_spark
-
-    spark = get_spark(app=f"{args.job}-{args.run_id}", master=args.master)
-
-    # one warning policy for every branch: flags that don't apply to the
-    # selected job are named, never silently ignored
-    crawl_inputs = (
-        ("--robots", args.robots, None),
-        ("--sitemaps", args.sitemaps, None),
-    )
-    train_inputs = (
-        ("--epochs", args.epochs, 4),
-        ("--lr", args.lr, "0.25"),
-    )
-    inapplicable = {
-        "extract": (
-            ("--dedup-lines", args.dedup_lines, False),
-            ("--dedup-spans", args.dedup_spans, False),
-            ("--dedup-near", args.dedup_near, False),
-            ("--decontaminate", args.decontaminate, None),
-            *crawl_inputs,
-            *train_inputs,
-        ),
-        "train": (
-            ("--buckets", args.buckets, 256),
-            ("--partitions", args.partitions, None),
-            ("--output-table", args.output_table, None),
-            ("--dedup-lines", args.dedup_lines, False),
-            ("--dedup-spans", args.dedup_spans, False),
-            ("--dedup-near", args.dedup_near, False),
-            ("--diff-against", args.diff_against, None),
-            ("--decontaminate", args.decontaminate, None),
-            *crawl_inputs,
-        ),
-        "linkgraph": (
-            ("--buckets", args.buckets, 256),
-            ("--output-table", args.output_table, None),
-            ("--dedup-lines", args.dedup_lines, False),
-            ("--dedup-spans", args.dedup_spans, False),
-            ("--dedup-near", args.dedup_near, False),
-            ("--diff-against", args.diff_against, None),
-            ("--decontaminate", args.decontaminate, None),
-            *crawl_inputs,
-            *train_inputs,
-        ),
-        "curate": (
-            ("--buckets", args.buckets, 256),
-            ("--partitions", args.partitions, None),
-            ("--output-table", args.output_table, None),
-            ("--diff-against", args.diff_against, None),
-            *crawl_inputs,
-            *train_inputs,
-        ),
-        "frontier": (
-            ("--buckets", args.buckets, 256),
-            ("--output-table", args.output_table, None),
-            ("--dedup-lines", args.dedup_lines, False),
-            ("--dedup-spans", args.dedup_spans, False),
-            ("--dedup-near", args.dedup_near, False),
-            ("--decontaminate", args.decontaminate, None),
-            *train_inputs,
-        ),
-        "cdx": (
-            ("--buckets", args.buckets, 256),
-            ("--partitions", args.partitions, None),
-            ("--output-table", args.output_table, None),
-            ("--dedup-lines", args.dedup_lines, False),
-            ("--dedup-spans", args.dedup_spans, False),
-            ("--dedup-near", args.dedup_near, False),
-            ("--diff-against", args.diff_against, None),
-            ("--decontaminate", args.decontaminate, None),
-            *crawl_inputs,
-            *train_inputs,
-            # cdx always reads WARC; an explicit CONFLICTING format must be
-            # named as ignored, not silently dropped into a parse error
-            # ('auto' and 'warc' are both consistent with the job)
-            (
-                "--input-format",
-                args.input_format if args.input_format not in ("auto", "warc") else "auto",
-                "auto",
-            ),
-        ),
-    }[args.job]
-    ignored = [name for name, val, default in inapplicable if val != default]
+    ignored = ignored_flags(ap, args)
     if ignored:
         print(
             f"WARNING: {', '.join(ignored)} do not apply to --job {args.job} "
             "and are ignored",
             file=sys.stderr,
         )
+
+    from ocr_machine_spark.plans.lineage import run_extraction
+    from ocr_machine_spark.session import get_spark
+
+    spark = get_spark(app=f"{args.job}-{args.run_id}", master=args.master)
 
     if args.job == "cdx":
         from ocr_machine_spark.sources.warc import read_warc_cdx

@@ -137,10 +137,10 @@ def anchor_text_index(
     Scale shape: one (target, term) partial-count agg (map-side combine
     collapses hot nav terms before the shuffle), then a row_number window
     whose ``rank <= j`` filter Spark rewrites into WindowGroupLimit — the
-    partial top-j runs BELOW the exchange (verified plan shape, see
-    BENCH/ivf_skew_bench.json), so a mega-target (every page linking to
-    one homepage) ships at most j rows per upstream partition, never its
-    full inlink term stream. Deliberately NO whole-partition aggregate
+    partial top-j runs BELOW the exchange (WindowGroupLimit asserted in
+    tests/test_graph_ops.py::test_anchor_text_index_semantics_and_plan),
+    so a mega-target (every page linking to one homepage) ships at most j
+    rows per upstream partition, never its full inlink term stream. Deliberately NO whole-partition aggregate
     (e.g. a per-target term total) rides the same window: an unbounded
     frame would force every row through the exchange and defeat the
     group-limit pushdown — totals belong in a separate aggregation.

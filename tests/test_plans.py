@@ -143,6 +143,25 @@ def test_embedding_dup_pairs_never_cross_joins(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_ivf_topk_is_group_limited_below_the_exchange(spark):
+    """The IVF search's per-query top-k must pre-prune to k rows per query
+    on the map side: a partial WindowGroupLimit below the qid exchange and
+    the final one above it. This is what bounds a query whose probed cells
+    hold most of the corpus (a skewed cell) without a salted re-rank."""
+    from ocr_machine_spark.operators.similarity import ann_topk_ivf
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    lines = _physical(ann_topk_ivf(emb, [0, 1, 2, 3, 4], k=10, n_cells=16, n_probe=4)).splitlines()
+
+    def at(*needles):
+        return next(i for i, line in enumerate(lines) if all(n in line for n in needles))
+
+    final = at("WindowGroupLimit", "Final")
+    exchange = at("Exchange hashpartitioning(qid#")
+    partial = at("WindowGroupLimit", "Partial")
+    assert final < exchange < partial, "\n".join(lines)
+
+
 def test_asof_join_has_no_join_blowup(spark):
     """The as-of query is a single window over a union — no join node at all
     (round-2 fix for the per-user cross-product shape)."""
