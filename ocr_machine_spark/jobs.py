@@ -18,7 +18,8 @@ Sizing guidance at 10^12 rows / 100 TB html:
 * --buckets: O(10^5) so each bucket is a few hundred MB of output and a
   resume unit; bucket id = pmod(xxhash64(url), buckets) — stable across runs
   and cluster sizes. A bucket costs one lineage row per run, not a
-  directory: a run writes one file per write task under data/run_id=<id>/.
+  directory (a run writes one file per write task under data/run_id=<id>/)
+  and no driver time on resume (committed buckets are anti-joined in the plan).
 * --run-id: one path segment of [A-Za-z0-9._-], used once per --output
   (a crashed run's id has no lineage rows and may be reused).
 * --partitions: 2-4× total executor cores; the salted repartition in

@@ -8,8 +8,9 @@ structural:
 * the input is split into deterministic **buckets** — ``pmod(xxhash64(url),
   n_buckets)`` — so bucket membership never depends on run order or cluster
   size;
-* each run processes only buckets absent from the **lineage table**
-  (an anti-join on committed partition ids);
+* each run processes only buckets absent from the **lineage table** (a
+  broadcast anti-join on committed partition ids; lineage reaches the
+  driver only as single-row aggregates);
 * the bucket is the resume unit, not a directory: each run writes its rows
   under its own directory, ``data/run_id=<run_id>/``, one file per write
   task, with ``bucket`` as an ordinary column sorted within each file (tight
@@ -17,7 +18,8 @@ structural:
   costs as many files as the write has tasks and as many lineage rows as it
   has buckets, so the bucket count is no per-run file or listing cost;
 * data files are written first, then one lineage row per processed bucket is
-  appended — the ``(bucket, run_id)`` lineage row IS the commit marker. A run
+  appended from one ``groupBy("bucket")`` in the plan — the ``(bucket,
+  run_id)`` lineage row IS the commit marker. A run
   id is used once; before it writes, a run deletes every run directory that
   has no lineage row (the orphans of crashed runs; single writer per output);
 * readers go through ``read_extractions``, which semi-joins data against
@@ -47,15 +49,17 @@ LINEAGE_DIR = "_lineage"
 DATA_DIR = "data"
 RUN_DIR_PREFIX = "run_id="
 _RUN_ID = re.compile(r"[A-Za-z0-9._-]+")
+# the per-bucket lineage counts, in lineage column order
+_COUNTS = ("rows_in", "rows_out", "pages_ok", "pages_failed", "bytes_html", "chars_extracted")
+_LINEAGE_SCHEMA = (
+    "partition_id long, run_id string, rows_in long, rows_out long, pages_ok long, pages_failed long, "
+    "bytes_html long, chars_extracted long, input_split string, n_buckets long, committed_snapshot long"
+)
 # what readers see under data/: the written rows plus the run id the
 # directory name carries — typed string, so a run id "007" stays "007"
 _DATA_SCHEMA = StructType(
     [*EXTRACT_SCHEMA.fields, StructField("bucket", IntegerType()), StructField("run_id", StringType())]
 )
-
-
-def _lineage_path(out_dir: str) -> str:
-    return os.path.join(out_dir, LINEAGE_DIR)
 
 
 def _data_path(out_dir: str) -> str:
@@ -117,9 +121,8 @@ def _read_lineage_or_none(spark: SparkSession, out_dir: str) -> DataFrame | None
     must propagate, not silently restart a 100-TB job from bucket zero."""
     from pyspark.errors import AnalysisException
 
-    path = _lineage_path(out_dir)
     try:
-        return spark.read.parquet(path)
+        return read_lineage(spark, out_dir)
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None
@@ -163,7 +166,8 @@ def run_extraction(
     """Extract all not-yet-committed buckets of ``pages`` into ``out_dir``.
 
     ``max_buckets_this_run`` exists for failure-injection tests (process only
-    k buckets, "crash", resume). Returns run stats.
+    k buckets, "crash", resume): it selects the k lowest uncommitted bucket
+    ids. Returns run stats, aggregated from this run's lineage rows.
 
     EVERY processed bucket gets a lineage row, including empty ones (rows 0)
     — "committed" means processed, not non-empty. Otherwise sparse inputs
@@ -177,31 +181,33 @@ def run_extraction(
     if not _RUN_ID.fullmatch(run_id):
         raise ValueError(f"run_id {run_id!r} must match [A-Za-z0-9._-]+")
     lin = _read_lineage_or_none(spark, out_dir)
-    done: list[int] = []
     runs: set[str] = set()
+    todo = with_bucket(pages, n_buckets)
+    # the bucket ids, in one partition: a task per core would be empty work
+    ids = spark.range(n_buckets, numPartitions=1).select(F.col("id").cast("int").alias("bucket"))
     if lin is not None:
-        committed = lin.select("partition_id", "run_id", "n_buckets").collect()
+        seen = lin.agg(F.collect_set("n_buckets"), F.collect_set("run_id")).first()
         # resume guard: bucket ids only compose within ONE bucket space —
         # resuming 16-bucket lineage with --buckets 256 would silently skip
         # never-extracted rows and duplicate committed ones
-        prev = sorted({r["n_buckets"] for r in committed})
+        prev = sorted(seen[0])
         if prev and prev != [n_buckets]:
             raise ValueError(
                 f"lineage at {out_dir} was committed with n_buckets={prev}; "
                 f"resume must use the same value (got {n_buckets})"
             )
-        runs = {r["run_id"] for r in committed}
+        runs = set(seen[1])
         if run_id in runs:
             raise ValueError(f"run_id {run_id!r} already has lineage rows at {out_dir}")
-        done = sorted({r["partition_id"] for r in committed})
+        committed = F.broadcast(lin.select(F.col("partition_id").cast("int").alias("bucket")))
+        todo = todo.join(committed, "bucket", "left_anti")
+        ids = ids.join(committed, "bucket", "left_anti")
     _sweep_orphan_runs(spark, out_dir, runs)
-    bucketed = with_bucket(pages, n_buckets)
-    todo = bucketed.filter(~F.col("bucket").isin(done)) if done else bucketed
-
-    processed = sorted(set(range(n_buckets)) - set(done))
     if max_buckets_this_run is not None:
-        processed = processed[:max_buckets_this_run]
-        todo = todo.filter(F.col("bucket").isin(processed))
+        # the k lowest uncommitted ids; a null bound (k = 0, none left) takes none
+        kth = ids.orderBy("bucket").limit(max_buckets_this_run).agg(F.max("bucket")).first()[0]
+        selected = F.col("bucket") <= F.lit(kth)
+        todo, ids = todo.filter(selected), ids.filter(selected)
 
     extracted = extract_pages(todo, partitions=partitions)
     out = with_bucket(extracted, n_buckets)  # same deterministic bucket fn
@@ -210,66 +216,55 @@ def run_extraction(
     # when a catalog is configured)
     sink = write_bucketed(out, spark, path=_run_path(out_dir, run_id), table=table)
 
-    # 2) lineage from what's actually committed (auditable), written last.
-    # Read back through the SINK that was written: the Iceberg table when a
-    # catalog took the data, else this run's directory, which holds only
-    # this run's rows — with an explicit schema, so an empty first run (only
-    # _SUCCESS on disk) reads as zero rows instead of failing schema
-    # inference.
+    # 2) lineage from what's actually committed (auditable), written last,
+    # read back through the SINK that was written: the Iceberg table, else
+    # this run's directory — with an explicit schema, so an empty run (only
+    # _SUCCESS on disk) reads as zero rows instead of failing inference.
     if sink == "iceberg":
-        written = spark.table(table).filter(F.col("bucket").isin(processed))
+        written = spark.table(table).join(F.broadcast(ids), "bucket", "left_semi")
         snapshot = _current_snapshot(spark, table)
     else:
         written = spark.read.schema(out.schema).parquet(_run_path(out_dir, run_id))
         snapshot = -1  # parquet sand-box stand-in has no snapshot ids
-    agg_rows = written.groupBy("bucket").agg(
-        F.count("*").alias("rows_out"),
-        F.sum(F.col("ok").cast("long")).alias("pages_ok"),
-        F.sum((~F.col("ok")).cast("long")).alias("pages_failed"),
-        F.sum("bytes_html").alias("bytes_html"),
-        F.sum("chars_out").alias("chars_extracted"),
-    ).collect()  # ≤ n_buckets small rows — aggregate ONCE, reuse for write+stats
-    # rows_in from the INPUT side (column-pruned: bucket derives from url
-    # only) — extraction is total/1:1 today, but the paired columns exist to
-    # EXPOSE a drop/expand the day a stage introduces one, so they must not
-    # share one expression
-    in_counts = {r[0]: r[1] for r in todo.groupBy("bucket").count().collect()}
-    by_bucket = {r["bucket"]: r for r in agg_rows}
-    lineage_rows = []
-    for b in processed:
-        r = by_bucket.get(b)
-        lineage_rows.append(
-            (
-                b,
-                run_id,
-                int(in_counts.get(b, 0)),
-                int(r["rows_out"]) if r else 0,
-                int(r["pages_ok"] or 0) if r else 0,
-                int(r["pages_failed"] or 0) if r else 0,
-                int(r["bytes_html"] or 0) if r else 0,
-                int(r["chars_extracted"] or 0) if r else 0,
-                input_split,
-                n_buckets,
-                snapshot,
-            )
-        )
-    lineage = spark.createDataFrame(
-        lineage_rows,
-        "partition_id long, run_id string, rows_in long, rows_out long, "
-        "pages_ok long, pages_failed long, bytes_html long, "
-        "chars_extracted long, input_split string, n_buckets long, "
-        "committed_snapshot long",
+    # one row per selected bucket: the ids at zero (an empty bucket commits
+    # too), rows_in from the INPUT and the rest from the files on disk.
+    # Extraction is 1:1 today, but the paired columns exist to EXPOSE a
+    # drop/expand, so rows_in and rows_out must not share one source
+    per_bucket = (
+        _counts(ids)
+        .unionByName(_counts(todo, rows_in=F.lit(1)))
+        .unionByName(_counts(written, rows_out=F.lit(1), pages_ok=F.col("ok"), pages_failed=~F.col("ok"),
+                             bytes_html=F.col("bytes_html"), chars_extracted=F.col("chars_out")))
+        .groupBy("bucket")
+        .agg(*(F.sum(c).alias(c) for c in _COUNTS))
     )
-    lineage.write.mode("append").parquet(_lineage_path(out_dir))
+    lineage = per_bucket.select(
+        F.col("bucket").cast("long").alias("partition_id"),
+        F.lit(run_id).alias("run_id"),
+        *_COUNTS,
+        F.lit(input_split).alias("input_split"),
+        F.lit(n_buckets).cast("long").alias("n_buckets"),
+        F.lit(snapshot).cast("long").alias("committed_snapshot"),
+    )
+    # This plan reads _lineage/ (the committed ids above) and appends to it
+    # in the same job. That is safe only because spark.read.parquet fixed
+    # the file listing of `lin` when it was called: the append's own files
+    # never feed back into the ids it selects.
+    lineage.write.mode("append").parquet(os.path.join(out_dir, LINEAGE_DIR))
 
-    return {
-        "run_id": run_id,
-        "buckets_committed": len(lineage_rows),
-        "rows": sum(r[3] for r in lineage_rows),
-        "pages_ok": sum(r[4] for r in lineage_rows),
-        "pages_failed": sum(r[5] for r in lineage_rows),
-        "bytes_html": sum(r[6] for r in lineage_rows),
-    }
+    stats = read_lineage(spark, out_dir).filter(F.col("run_id") == run_id).agg(
+        F.count("*").alias("buckets_committed"),
+        F.sum("rows_out").alias("rows"),
+        F.sum("pages_ok").alias("pages_ok"),
+        F.sum("pages_failed").alias("pages_failed"),
+        F.sum("bytes_html").alias("bytes_html"),
+    ).first()
+    return {"run_id": run_id, **{k: v or 0 for k, v in stats.asDict().items()}}
+
+
+def _counts(df: DataFrame, **cols) -> DataFrame:
+    """``df``'s bucket and the lineage counts: the given expressions, else 0."""
+    return df.select("bucket", *(cols.get(c, F.lit(0)).cast("long").alias(c) for c in _COUNTS))
 
 
 def _current_snapshot(spark: SparkSession, table: str) -> int:
@@ -299,7 +294,7 @@ def read_extractions(spark: SparkSession, out_dir: str, *, table: str | None = N
     Pass the same ``table`` the writer used when an Iceberg catalog took the
     data — the parquet dir under ``out_dir`` only exists for the parquet
     sink."""
-    lin = spark.read.parquet(_lineage_path(out_dir)).withColumnRenamed("partition_id", "bucket")
+    lin = read_lineage(spark, out_dir).withColumnRenamed("partition_id", "bucket")
     if table is not None and choose_sink(spark, table) == "iceberg":
         data, keys = spark.table(table), ["bucket"]
     else:
@@ -308,4 +303,6 @@ def read_extractions(spark: SparkSession, out_dir: str, *, table: str | None = N
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(_lineage_path(out_dir))
+    """The lineage table, read with its schema rather than inferring it
+    (inference costs a Spark job per read)."""
+    return spark.read.schema(_LINEAGE_SCHEMA).parquet(os.path.join(out_dir, LINEAGE_DIR))

@@ -114,8 +114,9 @@ def test_linkgraph_job_end_to_end(spark, tmp_path):
 
 def test_anchor_text_index_semantics_and_plan(spark):
     """Anchor index: per-target top-j terms by tf with (tf desc, term asc)
-    total order; and the rank<=j filter must compile to WindowGroupLimit so
-    a mega-target pre-prunes below the exchange (the 100-TB shape)."""
+    total order; and the rank<=j filter must compile to a partial
+    WindowGroupLimit below the target exchange and the final one above it,
+    so a mega-target pre-prunes below the exchange (the 100-TB shape)."""
     from ocr_machine_spark.operators.graphs import anchor_text_index
 
     rows = [
@@ -137,8 +138,15 @@ def test_anchor_text_index_semantics_and_plan(spark):
     assert got[("/y", 2)] == ("only", 1)
     assert len(got) == 4
 
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan, plan
+    lines = out._jdf.queryExecution().executedPlan().toString().splitlines()
+
+    def at(*needles):
+        return next(i for i, line in enumerate(lines) if all(n in line for n in needles))
+
+    final = at("WindowGroupLimit", "Final")
+    exchange = at("Exchange hashpartitioning(target#")
+    partial = at("WindowGroupLimit", "Partial")
+    assert final < exchange < partial, "\n".join(lines)
 
 
 def test_host_components_string_keys(spark):

@@ -3,6 +3,7 @@ partitioning, blocks/regions, lineage-tracked resume."""
 
 import glob
 import os
+import time
 
 import pyspark.sql.functions as F
 import pytest
@@ -273,6 +274,133 @@ def test_lineage_guards_run_id_and_old_layout(spark, pages, tmp_path):
     (old / "data" / "bucket=0").mkdir(parents=True)
     with pytest.raises(ValueError, match="bucket="):
         run_extraction(spark, pages, str(old), run_id="r1", n_buckets=16)
+
+
+def test_lineage_noop_resume_cost_is_flat_in_buckets(spark, pages, tmp_path):
+    """A resume selects its buckets in the plan, so its driver cost does not
+    grow with the committed bucket count: at 65,536 buckets a no-op resume
+    commits nothing in at most 1.5x the fresh run's wall time (driver-side
+    bucket lists made it about 8x). The no-op is timed twice and the faster
+    try counts, so one burst of host noise does not decide the ratio."""
+    out = str(tmp_path / "many")
+    t0 = time.perf_counter()
+    s1 = run_extraction(spark, pages, out, run_id="r1", n_buckets=65536)
+    fresh = time.perf_counter() - t0
+    assert s1["buckets_committed"] == 65536 and s1["rows"] == N
+    noop = []
+    for run_id in ("r2", "r3"):
+        t0 = time.perf_counter()
+        s = run_extraction(spark, pages, out, run_id=run_id, n_buckets=65536)
+        noop.append(time.perf_counter() - t0)
+        assert s["buckets_committed"] == 0 and s["rows"] == 0
+    assert min(noop) <= 1.5 * fresh, (fresh, noop)
+
+
+def test_lineage_fresh_run_job_count(spark, pages, tmp_path):
+    """The commit's action count is pinned: a fresh 16-bucket run over the
+    fixture pages took 6 Spark jobs while the bucket set went through the
+    driver, and 5 since the lineage rows are built and appended in the plan
+    and its stats read back with the lineage schema."""
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh-run-jobs", "run_extraction job count")
+    try:
+        run_extraction(spark, pages, str(tmp_path / "jobs"), run_id="r1", n_buckets=16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("fresh-run-jobs")
+    assert 0 < len(jobs) <= 6, sorted(jobs)
+
+
+_RETRY_SCRIPT = """
+import json, os, sys
+
+import pyspark.sql.functions as F
+from pyspark import TaskContext
+
+from ocr_machine_spark.plans.lineage import read_extractions, read_lineage, run_extraction
+from ocr_machine_spark.session import get_spark
+from ocr_machine_spark.sources.pages import generate_goldens, generate_pages
+
+work, n = sys.argv[1], int(sys.argv[2])
+spark = get_spark(app="retry", master="local[2,2]", shuffle_partitions=4, extra={"spark.ui.enabled": "false"})
+spark.sparkContext.setLogLevel("ERROR")
+jvm = spark.sparkContext._gateway.proc
+pages = generate_pages(spark, n, partitions=2)
+poison = sorted(r["url"] for r in pages.select("url").collect())[n // 2]
+marker = os.path.join(work, "failed")
+
+
+def fail_first_attempt(batches):
+    for batch in batches:
+        if TaskContext.get().attemptNumber() == 0 and poison in batch.column("url").to_pylist():
+            open(marker, "a").close()
+            raise RuntimeError(f"injected first-attempt failure at {poison}")
+        yield batch
+
+
+out = os.path.join(work, "out")
+stats = run_extraction(
+    spark, pages.mapInArrow(fail_first_attempt, schema=pages.schema), out, run_id="r1", n_buckets=8
+)
+done = read_extractions(spark, out)
+want = generate_goldens(spark, n, partitions=2).select("url", F.col("extracted_text").alias("want"))
+lin = read_lineage(spark, out).agg(F.sum("rows_in"), F.sum("rows_out")).first()
+print(json.dumps({
+    "failed_once": os.path.exists(marker),
+    "stats": stats,
+    "rows": done.count(),
+    "urls": done.select("url").distinct().count(),
+    "golden": done.join(want, "url").filter(F.col("extracted_text") == F.col("want")).count(),
+    "rows_in": lin[0],
+    "rows_out": lin[1],
+}), flush=True)
+spark.stop()
+jvm.terminate()
+jvm.wait(timeout=60)
+"""
+
+
+def test_lineage_task_retry_commits_exactly_once(tmp_path):
+    """A task that fails on its first attempt and succeeds on its retry:
+    the run succeeds and every url is committed exactly once with its golden
+    text. Plain local[N] never retries a task, so this runs in its own
+    local[2,2] session in a subprocess, which stops its JVM before it exits."""
+    import json
+    import signal
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        PYSPARK_PYTHON=sys.executable,
+        PYTHONPATH=os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p),
+    )
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    n = 40
+    # own process group: whatever the subprocess leaves is killed with it
+    proc = subprocess.Popen(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path), str(n)],
+        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, env=env, text=True, cwd=root,
+        start_new_session=True,
+    )
+    try:
+        out, _ = proc.communicate(timeout=600)
+    finally:
+        try:
+            os.killpg(proc.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+        if proc.poll() is None:
+            proc.communicate()
+    assert proc.returncode == 0, out
+    got = json.loads(out.strip().splitlines()[-1])
+    assert got["failed_once"], got
+    assert got["stats"]["buckets_committed"] == 8 and got["stats"]["pages_ok"] == n, got
+    assert got["rows"] == got["urls"] == got["golden"] == n, got
+    assert got["rows_in"] == got["rows_out"] == n, got
 
 
 def test_current_snapshot_only_missing_table_means_none(spark):
